@@ -24,7 +24,7 @@ object ScalingBench {
 
     // AQE defaults on (skew handling at scale); SPARK_GRAFT_AQE=off probes
     // how much of the suite's fixed cost is AQE's per-exchange
-    // re-optimization barrier on the ~50 reduced-frame stages
+    // re-optimization barrier on the reduced-frame stages
     val aqe = !sys.env.get("SPARK_GRAFT_AQE").contains("off")
     val cacheInput = !sys.env.get("SPARK_GRAFT_CACHE").contains("off")
     // SPARK_GRAFT_INPUT=<parquet dir>: read the pages table from storage

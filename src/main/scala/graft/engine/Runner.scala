@@ -41,8 +41,8 @@ object Runner {
 
     /** Both outputs as ONE frame — a `kind` discriminator column over the
       * union (missing columns null-filled). Materializing this is ONE
-      * Spark action instead of two: the ~50 reduced-frame stages schedule
-      * once, and any shared-but-uncached lineage executes once. Sinks that
+      * Spark action instead of two: every check's stages schedule once,
+      * and any shared-but-uncached lineage executes once. Sinks that
       * need separate tables write with `.partitionBy("kind")` — still one
       * action. */
     def unified: DataFrame =
@@ -175,19 +175,12 @@ object Runner {
           throw new IllegalArgumentException(s"missing refTable ${c.refTable}"))
         (Referential.verdicts(input, ref, c, suite.keyCol),
           Referential.violations(input, ref, c, suite.keyCol))
-      // build each reduced tests frame ONCE and cache it — verdicts +
-      // violations both consume it, and the Fisher-enumeration / Holm UDFs
-      // it carries are the expensive part of these reduced-frame stages
+      // each reduced-frame family builds ONE cached kernel frame (one
+      // exchange above its cell counts) and derives both outputs from it
       case c: CategoricalConsistencyCheck =>
-        val (t0, pair0) = CategoricalConsistency.surfaces(input, c, cellPre.get(c.id))
-        val t = CacheTracker.cached(t0)
-        val pair = pair0.map(CacheTracker.cached)
-        (CategoricalConsistency.verdictsFrom(t, pair, input, c, cellPre.get(c.id)),
-          CategoricalConsistency.violationsFrom(t, input, c, cellPre.get(c.id)))
+        CategoricalConsistency.outputs(input, c, cellPre.get(c.id))
       case c: DigitPreferenceCheck =>
-        val t = CacheTracker.cached(DigitPreference.tests(input, c, cellPre.get(c.id)))
-        (DigitPreference.verdictsFrom(t, c),
-          DigitPreference.violationsFrom(t, input, c, cellPre.get(c.id)))
+        DigitPreference.outputs(input, c, cellPre.get(c.id))
       // model families: build the (eager, Gram-collecting) tests/flagged
       // lineage ONCE and derive both outputs from it — separate
       // verdicts/violations calls would each re-run the driver-side OLS
@@ -249,21 +242,33 @@ object Runner {
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(buildThreads, buildable.size))
+        // one frame sink per build, filled as the build caches — so the
+        // caches of a build that throws, and of siblings still running or
+        // already finished, are all re-homed into this thread's scope
+        val sinks = buildable.map(_ => new scala.collection.mutable.ListBuffer[DataFrame])
         try {
           val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
           val debug = spark.conf.get("spark.graft.build.debug", "false").toBoolean
-          val fs = buildable.map(c =>
-            scala.concurrent.Future(CacheTracker.isolated {
+          val fs = buildable.zip(sinks).map { case (c, sink) =>
+            scala.concurrent.Future(CacheTracker.isolated(sink) {
               val t0 = System.nanoTime()
               val out = buildCheck(c)
               if (debug) println(f"[runner] build ${c.id}%-20s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
               out
-            })(ec))
-          val built = fs.map(scala.concurrent.Await.result(_,
-            scala.concurrent.duration.Duration.Inf))
-          built.foreach { case (_, frames) => CacheTracker.registerAll(frames) }
-          built.map(_._1)
-        } finally pool.shutdown()
+            })(ec)
+          }
+          fs.map(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
+        } catch {
+          case e: Throwable =>
+            // queued builds never start their Spark jobs; running ones are
+            // interrupted and given a bounded wait to finish caching
+            pool.shutdownNow()
+            pool.awaitTermination(2, java.util.concurrent.TimeUnit.MINUTES)
+            throw e
+        } finally {
+          pool.shutdown()
+          sinks.foreach(CacheTracker.registerAll)
+        }
       }
 
     val verdicts = (statsResults ++ others.map(_._1))

@@ -155,6 +155,10 @@ case class CosineSim(left: Expression, right: Expression)
 case class SignBucket(child: Expression, bits: Int)
   extends UnaryExpression with CodegenFallback {
 
+  // the native `1L << i` wraps past bit 63 while the declarative
+  // pow(2, i) saturates, so the bit-identity only holds in 1..63
+  require(1 <= bits && bits <= 63, s"sign_bucket bits must be in 1..63, got $bits")
+
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def prettyName: String = "sign_bucket"

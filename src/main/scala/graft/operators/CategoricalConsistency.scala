@@ -3,32 +3,34 @@ package graft.operators
 import graft.engine.CacheTracker.TrackedCacheOps
 import graft.checks.{CategoricalConsistencyCheck, Results}
 import graft.stats.{Distributions, Holm}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Categorical-consistency / drift check — %catchk re-expressed.
   *
   * Reference (Categorical_Check.sas) runs one PROC FREQ **per (panel, bar)**
   * one-vs-rest table (:289-307) and one per pairwise (i,j) (:368-419) —
-  * O(k²) full re-scans. Here the whole check is ONE lineage with a single
-  * row-level shuffle:
+  * O(k²) full re-scans — then one PROC MULTTEST per panel (:435-466). Here
+  * the whole check is ONE row-level shuffle plus ONE shuffle of the
+  * reduced counts:
   *
-  *   scan → panel bin (F2) → groupBy(panel, group, value).count   [shuffle 1]
-  *   → window totals over the counts frame (W2, no extra shuffle of raw rows)
-  *   → zero-fill shell via the panel-value domain (J6)
-  *   → one-vs-rest cells (A9) → chi-square columns (M7)
-  *   → Holm per panel (M10, group-level rows only)
-  *   → verdicts (M13) + violation rows (worst-deviating category).
+  *   scan → panel bin (F2) → groupBy(scope, panel, grp, value).count [shuffle 1]
+  *   → groupBy(scope, panel): sort_array(collect_list(cell))          [shuffle 2]
+  *   → per-panel kernel (plain Scala): zero-filled grp × value table,
+  *     one-vs-rest chi-square / Freeman–Halton Fisher, pairwise grid,
+  *     Holm within panel (separate or pooled), the `_All_` bar margins
+  *     and each group's worst-deviating category
+  *   → cached; every surface below is a projection of that frame.
   *
-  * Everything after the groupBy operates on (panels × groups × categories)
-  * rows — thousands, not 10^12 — so window functions and the Holm
-  * collect_list are cheap regardless of input scale.
+  * Each panel's array is the reference's own per-panel PROC FREQ table —
+  * groups × categories cells. The pairwise grid adds one tiny aggregate:
+  * its missing-pair rows span every group that qualifies in ANY panel
+  * (:402-416), a global domain broadcast into the kernel.
   */
 object CategoricalConsistency {
 
   // row-level panel key is the INT code; the label is rendered on the
-  // reduced counts frame (PanelBins.panelCode scaladoc has the rationale)
+  // reduced frame (PanelBins.panelCode scaladoc has the rationale)
   private def panelCodeExpr(check: CategoricalConsistencyCheck) = check.dateCol match {
     case Some(dc) => PanelBins.panelCode(col(dc), check.interval)
     case None => lit(-1)
@@ -44,6 +46,172 @@ object CategoricalConsistency {
         "grp" -> col(check.groupCol),
         "value" -> col(check.valueCol)))
 
+  /** (scope..., panel, grp, value, cnt): the CellScan slice, else own input pass. */
+  private def counts(df: DataFrame, check: CategoricalConsistencyCheck,
+      pre: Option[DataFrame]): DataFrame = pre.getOrElse {
+    val keyCols = check.scope :+ "panel"
+    df.filter(col(check.valueCol).isNotNull && col(check.groupCol).isNotNull)
+      .withColumn("panel", panelCodeExpr(check))
+      .groupBy((keyCols :+ check.groupCol :+ check.valueCol).map(col): _*)
+      .agg(count(lit(1)).as("cnt"))
+      .withColumnRenamed(check.groupCol, "grp")
+      .withColumnRenamed(check.valueCol, "value")
+      .trackedCache()
+  }
+
+  // Kernel result rows, fields named like the output columns. Group /
+  // value / pair members are 1-based indices into the panel's Spark-sorted
+  // `__grps` / `__vals` arrays (pairs: into the global `__dom`), so
+  // ordering and equality stay Spark's own.
+  final case class Cell(g: Int, v: Int, cnt: Long)
+  final case class OneVsRest(g: Int, stat: Double, df: Double, n_grp: Long, n_panel: Long,
+      p_raw: Double, test_used: String, p_holm: Double, p_pool: Double,
+      worst_v: Int, worst_cnt: Long)
+  final case class Pair(g1: Int, g2: Int, stat: Option[Double], df: Option[Double],
+      n1: Long, n2: Long, p_raw: Double, test_used: String, p_holm: Double, p_pool: Double)
+  final case class PanelResult(cells: Seq[Cell], grp_total: Seq[Long], value_total: Seq[Long],
+      total: Long, ovr: Seq[OneVsRest], pairs: Seq[Pair])
+
+  /** One panel's tests from its (grp index, value index, cnt) cells.
+    * `dom(g)` is group g's 1-based position in the global pairwise domain
+    * of size `nDom` (0 = no pairwise grid). Arithmetic mirrors the SQL
+    * expressions it replaced operation for operation (long products,
+    * StrictMath.pow) so stats agree with the reference to the last ulps. */
+  private[operators] def panelKernel(gi: Seq[Int], vi: Seq[Int], cnt: Seq[Long],
+      nG: Int, nV: Int, dom: Seq[Int], nDom: Int, minNum: Long,
+      fisher: Boolean): PanelResult = {
+    val m = new Array[Long](nG * nV)
+    gi.indices.foreach(i => m((gi(i) - 1) * nV + vi(i) - 1) += cnt(i))
+    def at(g: Int, v: Int) = m(g * nV + v)
+    val gt = Array.tabulate(nG)(g => (0 until nV).map(at(g, _)).sum)
+    val pvt = Array.tabulate(nV)(v => (0 until nG).map(at(_, v)).sum)
+    val n = gt.sum
+    def x2(o: Double, e: Double) = if (e > 0) StrictMath.pow(o - e, 2) / e else 0.0
+    // fisher runs the Freeman–Halton network algorithm on the full 2×C
+    // table (PROC FREQ's exact test, Categorical_Check.sas:298,305); past
+    // the enumeration budget it falls back to chi-square, FLAGGED so the
+    // verdict row is honest about the substitution (SURVEY §7.6.2)
+    def pTest(stat: Double, df: Double, r1: Seq[Long], r2: Seq[Long]): (Double, String) =
+      if (!fisher) (Distributions.chiSqPValue(stat, df), "chisq")
+      else Distributions.fisherExact2xC(r1.toArray, r2.toArray) match {
+        case Some(p) => (p, "fisher")
+        case None => (Distributions.chiSqPValue(stat, df), "chisq_fallback")
+      }
+    // one-vs-rest 2×C per group; a single-group panel has no "rest"
+    val ovr0 = (0 until nG).filter(g => gt(g) > minNum && nV >= 2 && n > gt(g)).map { g =>
+      val vs = 0 until nV
+      val stat = vs.map { v =>
+        val c = at(g, v)
+        x2(c.toDouble, (gt(g) * pvt(v)).toDouble / n) +
+          x2((pvt(v) - c).toDouble, ((n - gt(g)) * pvt(v)).toDouble / n)
+      }.sum
+      val (p, used) = pTest(stat, nV - 1.0, vs.map(at(g, _)), vs.map(v => pvt(v) - at(g, v)))
+      // worst-deviating category: largest |row% − overall%|, ties → first value
+      val dev = vs.map(v => if (gt(g) > 0 && pvt(v) > 0)
+        math.abs(at(g, v).toDouble / gt(g) - pvt(v).toDouble / n) else 0.0)
+      val w = vs.foldLeft(0)((b, v) => if (dev(v) > dev(b)) v else b)
+      OneVsRest(g + 1, stat, nV - 1.0, gt(g), n, p, used, 0.0, 0.0, w + 1, at(g, w))
+    }
+    // pairwise grid over the GLOBAL domain: untestable / absent pairs keep
+    // p=1 rows in the Holm family (:402-416)
+    val local = Array.fill(nDom)(-1)
+    if (nDom > 0) (0 until nG).filter(gt(_) > minNum).foreach(g => local(dom(g) - 1) = g)
+    val pairs0 =
+      if (!local.exists(_ >= 0)) Seq.empty
+      else for (i <- 0 until nDom; j <- i + 1 until nDom) yield {
+        val (a, b) = (local(i), local(j))
+        if (a < 0 || b < 0) Pair(i + 1, j + 1, None, None, 0L, 0L, 1.0, "missing_pair", 0.0, 0.0)
+        else {
+          val (n1, n2) = (gt(a), gt(b))
+          val nn = (n1 + n2).toDouble
+          val live = (0 until nV).filter(v => at(a, v) + at(b, v) > 0)
+          val stat = (0 until nV).map { v =>
+            val rv = (at(a, v) + at(b, v)).toDouble
+            x2(at(a, v).toDouble, n1 * rv / nn) + x2(at(b, v).toDouble, n2 * rv / nn)
+          }.sum
+          val df = live.size - 1.0
+          val (p, used) =
+            if (df < 1) (1.0, "missing_pair")
+            else pTest(stat, df, live.map(at(a, _)), live.map(at(b, _)))
+          Pair(i + 1, j + 1, Some(stat), Some(df), n1, n2, p, used, 0.0, 0.0)
+        }
+      }
+    val hO = Holm.adjust(ovr0.map(_.p_raw))
+    val hP = Holm.adjust(pairs0.map(_.p_raw))
+    val pooled = Holm.adjust(ovr0.map(_.p_raw) ++ pairs0.map(_.p_raw))
+    PanelResult(
+      for (g <- 0 until nG; v <- 0 until nV) yield Cell(g + 1, v + 1, at(g, v)),
+      gt.toSeq, pvt.toSeq, n,
+      ovr0.indices.map(i => ovr0(i).copy(p_holm = hO(i), p_pool = pooled(i))),
+      pairs0.indices.map(i => pairs0(i).copy(p_holm = hP(i), p_pool = pooled(ovr0.size + i))))
+  }
+
+  private val kernelUdf = udf(panelKernel _)
+
+  /** Global pairwise domain: every group with more than `minNum` rows in
+    * some panel, Spark-sorted. One row, broadcast into the kernel. */
+  private def pairDomain(c: DataFrame, check: CategoricalConsistencyCheck): DataFrame =
+    PanelBins.renderPanelCol(c, check.interval).groupBy((check.scope :+ "panel" :+ "grp").map(col): _*)
+      .agg(sum(col("cnt")).as("gt"))
+      .filter(col("gt") > check.minNum)
+      .agg(sort_array(collect_set(col("grp"))).as("__dom"))
+
+  /** The reduced-frame tail: ONE groupBy(scope, panel) of the counts, then
+    * the per-panel kernel. Uncached — [[kernel]] caches it. */
+  private[graft] def tail(c: DataFrame, check: CategoricalConsistencyCheck,
+      withPairs: Boolean): DataFrame = {
+    val keyCols = (check.scope :+ "panel").map(col)
+    val grouped = PanelBins.renderPanelCol(c, check.interval).groupBy(keyCols: _*)
+      .agg(sort_array(collect_list(
+      struct(col("grp"), col("value"), col("cnt").cast("long").as("cnt")))).as("__cells"))
+    val withDom = if (withPairs) grouped.crossJoin(broadcast(pairDomain(c, check))) else grouped
+    val cs = col("__cells")
+    val (dom, nDom) =
+      if (withPairs) (transform(col("__grps"), g => array_position(col("__dom"), g).cast("int")),
+        size(col("__dom")))
+      else (array().cast("array<int>"), lit(0))
+    withDom
+      .withColumn("__grps", array_distinct(transform(cs, _.getField("grp"))))
+      .withColumn("__vals", array_sort(array_distinct(transform(cs, _.getField("value")))))
+      .withColumn("__k", kernelUdf(
+        transform(cs, x => array_position(col("__grps"), x.getField("grp")).cast("int")),
+        transform(cs, x => array_position(col("__vals"), x.getField("value")).cast("int")),
+        transform(cs, _.getField("cnt")),
+        size(col("__grps")), size(col("__vals")), dom, nDom,
+        lit(check.minNum), lit(check.test.equalsIgnoreCase("fisher"))))
+      .drop("__cells")
+  }
+
+  /** Cached per-panel kernel frame — every public surface projects it. */
+  private[graft] def kernel(df: DataFrame, check: CategoricalConsistencyCheck,
+      pre: Option[DataFrame], withPairs: Boolean): DataFrame =
+    tail(counts(df, check, pre), check, withPairs).trackedCache()
+
+  private def keyCols(check: CategoricalConsistencyCheck): Seq[Column] =
+    (check.scope :+ "panel").map(col)
+
+  /** One-vs-rest rows (with the worst-category fields) under the chosen
+    * Holm family: `p_holm` (within one-vs-rest) or `p_pool` (pooled). */
+  private def ovrRows(k: DataFrame, check: CategoricalConsistencyCheck, p: String): DataFrame =
+    k.select(keyCols(check) ++ Seq(col("__grps"), col("__vals"),
+        col("__k.value_total").as("__vt"), explode(col("__k.ovr")).as("o")): _*)
+      .select(keyCols(check) ++ (element_at(col("__grps"), col("o.g")).as("grp") +:
+        Seq("stat", "df", "n_grp", "n_panel", "p_raw", "test_used").map(f => col(s"o.$f"))) ++ Seq(
+        col(s"o.$p").as("p_holm"),
+        element_at(col("__vals"), col("o.worst_v")).as("worst"), col("o.worst_cnt"),
+        element_at(col("__vt"), col("o.worst_v")).as("worst_total")): _*)
+
+  private def testCols(k: DataFrame, check: CategoricalConsistencyCheck, p: String) =
+    ovrRows(k, check, p).drop("worst", "worst_cnt", "worst_total")
+
+  private def pairRows(k: DataFrame, check: CategoricalConsistencyCheck, p: String): DataFrame =
+    k.select(keyCols(check) :+ col("__dom") :+ explode(col("__k.pairs")).as("q"): _*)
+      .select(keyCols(check) ++ Seq(
+        element_at(col("__dom"), col("q.g1")).as("grp1"),
+        element_at(col("__dom"), col("q.g2")).as("grp2")) ++
+        Seq("stat", "df", "n1", "n2", "p_raw", "test_used").map(f => col(s"q.$f")) :+
+        col(s"q.$p").as("p_holm"): _*)
+
   /** Contingency cells with one-vs-rest margins, zero-filled.
     * Output grain: (scopeCols..., panel, grp, value) with cnt, grp_total,
     * panel_value_total, panel_total.
@@ -51,113 +219,28 @@ object CategoricalConsistency {
     *            from the fused CellScan — skips this check's own input scan.
     */
   def cells(df: DataFrame, check: CategoricalConsistencyCheck,
-      pre: Option[DataFrame] = None): DataFrame = {
-    val keyCols = check.scope :+ "panel"
-    // cache the reduced counts frame (panels × groups × categories rows —
-    // tiny at any input scale): the shell domains, fill join, tests and
-    // violations all reuse it, so the 10^12-row aggregation runs ONCE.
-    // Spark's cache manager dedups identical plans, so verdicts+violations
-    // share this cache across separate calls.
-    val counts = pre.getOrElse {
-      df.filter(col(check.valueCol).isNotNull && col(check.groupCol).isNotNull)
-        .withColumn("panel", panelCodeExpr(check))
-        .select((keyCols :+ check.groupCol :+ check.valueCol).map(col): _*)
-        .groupBy((keyCols :+ check.groupCol :+ check.valueCol).map(col): _*)
-        .agg(count(lit(1)).as("cnt"))
-        .withColumnRenamed(check.groupCol, "grp")
-        .withColumnRenamed(check.valueCol, "value")
-        .trackedCache()
-    }
-    // panel label rendering happens HERE, on the reduced frame — the scan
-    // grouped on the int panel code (no-op for caller-built string pres)
-    val countsR = PanelBins.renderPanelCol(counts, check.interval)
-    // zero-fill shell: (panel × grp) ⨯ (panel × value) domains (J6).
-    // Null-safe joins: null scope values and null panels (null dateCol)
-    // form real groups that must keep their counts, not be dropped/zeroed
-    val grpDom = countsR.select((keyCols :+ "grp").map(col): _*).distinct()
-    val valDom = countsR.select((keyCols :+ "value").map(col): _*).distinct()
-    val shell = NullSafeJoin(grpDom, valDom, keyCols)
-    val filled = NullSafeJoin.left(shell, countsR, keyCols :+ "grp" :+ "value")
-      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-    val wGrp = Window.partitionBy((keyCols :+ "grp").map(col): _*)
-    val wVal = Window.partitionBy((keyCols :+ "value").map(col): _*)
-    val wPanel = Window.partitionBy(keyCols.map(col): _*)
-    filled
-      .withColumn("grp_total", sum("cnt").over(wGrp))
-      .withColumn("panel_value_total", sum("cnt").over(wVal))
-      .withColumn("panel_total", sum("cnt").over(wPanel))
-  }
+      pre: Option[DataFrame] = None): DataFrame =
+    kernel(df, check, pre, check.pairwise)
+      .select(keyCols(check) ++ Seq(col("__grps"), col("__vals"), col("__k"),
+        explode(col("__k.cells")).as("c")): _*)
+      .select(keyCols(check) ++ Seq(
+        element_at(col("__grps"), col("c.g")).as("grp"),
+        element_at(col("__vals"), col("c.v")).as("value"),
+        col("c.cnt").as("cnt"),
+        element_at(col("__k.grp_total"), col("c.g")).as("grp_total"),
+        element_at(col("__k.value_total"), col("c.v")).as("panel_value_total"),
+        col("__k.total").as("panel_total")): _*)
 
   /** Per-(panel, grp) one-vs-rest test results: chi-square / Freeman–Halton
-    * Fisher on the full table, raw p, Holm-adjusted p within panel.
-    */
+    * Fisher on the full table, raw p, Holm-adjusted p within panel. */
   def tests(df: DataFrame, check: CategoricalConsistencyCheck,
       pre: Option[DataFrame] = None): DataFrame =
-    holmWithinPanel(oneVsRestRaw(df, check, pre), check.scope :+ "panel")
-
-  /** One-vs-rest frame with raw p-values, BEFORE the Holm adjustment —
-    * the multtest input rows the reference tags plot='Stacked'
-    * (Categorical_Check.sas:435-441). */
-  private[operators] def oneVsRestRaw(df: DataFrame, check: CategoricalConsistencyCheck,
-      pre: Option[DataFrame] = None): DataFrame = {
-    val keyCols = check.scope :+ "panel"
-    val c = cells(df, check, pre)
-    // one-vs-rest 2×C cells: o1 = cnt, o2 = panel_value_total - cnt
-    // expected under homogeneity: e1 = grp_total * pvt / N, e2 = (N-grp_total) * pvt / N
-    val withE = c
-      .withColumn("o1", col("cnt").cast("double"))
-      .withColumn("o2", (col("panel_value_total") - col("cnt")).cast("double"))
-      .withColumn("e1", col("grp_total") * col("panel_value_total") / col("panel_total"))
-      .withColumn("e2", (col("panel_total") - col("grp_total")) * col("panel_value_total") / col("panel_total"))
-      .withColumn("x2_term",
-        when(col("e1") > 0, pow(col("o1") - col("e1"), 2) / col("e1")).otherwise(0.0) +
-        when(col("e2") > 0, pow(col("o2") - col("e2"), 2) / col("e2")).otherwise(0.0))
-    val perGrp = withE
-      .groupBy((keyCols :+ "grp").map(col): _*)
-      .agg(
-        sum("x2_term").as("stat"),
-        (countDistinct("value") - 1).cast("double").as("df"),
-        first("grp_total").as("n_grp"),
-        first("panel_total").as("n_panel"),
-        // 2×2 cells for Fisher when the panel has exactly 2 categories:
-        // sort by value for determinism
-        sort_array(collect_list(struct(col("value"), col("o1"), col("o2")))).as("cells2"))
-      .filter(col("n_grp") > check.minNum && col("df") >= 1 &&
-        col("n_panel") > col("n_grp")) // a single-group panel has no "rest"
-    val useFisher = check.test.equalsIgnoreCase("fisher")
-    // which test actually produced the p-value: fisher runs the
-    // Freeman–Halton network algorithm on the full 2×C table (matching
-    // PROC FREQ's exact test on var×inBar, Categorical_Check.sas:298,305);
-    // only when the table exceeds the exact-enumeration budget do we fall
-    // back to chi-square, FLAGGED so the verdict row is honest about the
-    // substitution (SURVEY §7.6.2).
-    val pUdf = udf((stat: Double, dfree: Double,
-        cells2: Seq[org.apache.spark.sql.Row]) => {
-      if (useFisher) {
-        val row1 = cells2.map(_.getDouble(1).round).toArray
-        val row2 = cells2.map(_.getDouble(2).round).toArray
-        Distributions.fisherExact2xC(row1, row2) match {
-          case Some(p) => (p, "fisher")
-          case None => (Distributions.chiSqPValue(stat, dfree), "chisq_fallback")
-        }
-      } else (Distributions.chiSqPValue(stat, dfree), "chisq")
-    })
-    perGrp
-      .withColumn("pt", pUdf(col("stat"), col("df"), col("cells2")))
-      .withColumn("p_raw", col("pt._1"))
-      .withColumn("test_used", col("pt._2"))
-      .drop("cells2", "pt")
-  }
+    testCols(kernel(df, check, pre, check.pairwise), check, "p_holm")
 
   /** Pairwise (i<j) group-vs-group tests — the reference's heat-map grid
     * (Categorical_Check.sas:368-419): one chi-square/Fisher per group pair
     * per panel over the values × {gᵢ, gⱼ} table, untestable/missing pairs
     * fall back to p=1 (:402-416), Holm within panel across all pairs.
-    *
-    * The reference runs O(k²) PROC FREQ re-scans; here the whole grid is a
-    * self-join of the cached counts frame (panels × C(k,2) × categories
-    * rows — thousands at any input scale) plus one shell join for the
-    * missing pairs, so input rows are scanned ONCE regardless of k.
     *
     * Deviations documented: (a) df counts categories with a nonzero pair
     * row total (SAS /zeros keeps all-zero rows in the printed table; they
@@ -168,245 +251,124 @@ object CategoricalConsistency {
     */
   def pairwiseTests(df: DataFrame, check: CategoricalConsistencyCheck,
       pre: Option[DataFrame] = None): DataFrame =
-    holmWithinPanel(pairwiseRaw(df, check, pre), check.scope :+ "panel")
-
-  /** Pairwise frame with raw p-values, BEFORE the Holm adjustment — the
-    * multtest input rows the reference tags plot='Heat'
-    * (Categorical_Check.sas:435-448). */
-  private[operators] def pairwiseRaw(df: DataFrame, check: CategoricalConsistencyCheck,
-      pre: Option[DataFrame] = None): DataFrame = {
-    val keyCols = check.scope :+ "panel"
-    val c = cells(df, check, pre)
-      .filter(col("grp_total") > check.minNum)
-      .select((keyCols.map(col) :+ col("grp") :+ col("value") :+
-        col("cnt") :+ col("grp_total")): _*)
-    val a = c.select((keyCols.map(col) :+ col("grp").as("grp1") :+ col("value") :+
-      col("cnt").as("c1") :+ col("grp_total").as("n1")): _*)
-    val b = c.select((keyCols.map(col) :+ col("grp").as("grp2") :+ col("value") :+
-      col("cnt").as("c2") :+ col("grp_total").as("n2")): _*)
-    val withE = NullSafeJoin(a, b, keyCols :+ "value")
-      .filter(col("grp1") < col("grp2"))
-      .withColumn("rv", (col("c1") + col("c2")).cast("double"))
-      .withColumn("n", (col("n1") + col("n2")).cast("double"))
-      .withColumn("e1", col("n1") * col("rv") / col("n"))
-      .withColumn("e2", col("n2") * col("rv") / col("n"))
-      .withColumn("x2_term",
-        when(col("e1") > 0, pow(col("c1") - col("e1"), 2) / col("e1")).otherwise(0.0) +
-        when(col("e2") > 0, pow(col("c2") - col("e2"), 2) / col("e2")).otherwise(0.0))
-    val perPair = withE
-      .groupBy((keyCols :+ "grp1" :+ "grp2").map(col): _*)
-      .agg(
-        sum("x2_term").as("stat"),
-        (countDistinct(when(col("rv") > 0, col("value"))) - 1).cast("double").as("df"),
-        first("n1").as("n1"),
-        first("n2").as("n2"),
-        sort_array(collect_list(when(col("rv") > 0,
-          struct(col("value"), col("c1").cast("double"), col("c2").cast("double"))))).as("cells2"))
-    // missing-pair shell: the reference emits p=1 rows for pairs PROC FREQ
-    // could not test (:402-416) — here any (panel, pair) where one group is
-    // absent (or the table is degenerate, df < 1)
-    val grpDomGlobal = c.select(col("grp")).distinct()
-    val pairDom = grpDomGlobal.select(col("grp").as("grp1"))
-      .crossJoin(grpDomGlobal.select(col("grp").as("grp2")))
-      .filter(col("grp1") < col("grp2"))
-    val panelDom = c.select(keyCols.map(col): _*).distinct()
-    val shell = panelDom.crossJoin(pairDom)
-    val full = NullSafeJoin.left(shell, perPair, keyCols :+ "grp1" :+ "grp2")
-      .withColumn("n1", coalesce(col("n1"), lit(0L)))
-      .withColumn("n2", coalesce(col("n2"), lit(0L)))
-    val useFisher = check.test.equalsIgnoreCase("fisher")
-    val pUdf = udf((dfree: java.lang.Double, stat: java.lang.Double,
-        cells2: Seq[org.apache.spark.sql.Row]) => {
-      if (dfree == null || dfree < 1) (1.0, "missing_pair") // missing/untestable pair
-      else if (useFisher) {
-        // rows = the two groups, columns = values — transpose of PROC
-        // FREQ's var×inBar table, same exact test by symmetry
-        val row1 = cells2.map(_.getDouble(1).round).toArray
-        val row2 = cells2.map(_.getDouble(2).round).toArray
-        Distributions.fisherExact2xC(row1, row2) match {
-          case Some(p) => (p, "fisher")
-          case None => (Distributions.chiSqPValue(stat, dfree), "chisq_fallback")
-        }
-      } else (Distributions.chiSqPValue(stat, dfree), "chisq")
-    })
-    // fallback p=1 rows stay in the Holm family (the reference's multtest
-    // input includes them, :435-448)
-    full
-      .withColumn("pt", pUdf(col("df"), col("stat"), col("cells2")))
-      .withColumn("p_raw", col("pt._1"))
-      .withColumn("test_used", col("pt._2"))
-      .drop("cells2", "pt")
-  }
+    pairRows(kernel(df, check, pre, withPairs = true), check, "p_holm")
 
   /** The reference's EXACT multtest family: one-vs-rest ('Stacked') and
     * pairwise ('Heat') p-values POOLED into one Holm step-down per panel
     * (Categorical_Check.sas:435-466), then split back. Returns
-    * (oneVsRest, pairwise) frames with the pooled `p_holm`.
-    *
-    * Both input frames are products of the same cached cells frame, so
-    * pooling adds no input scan — just one more reduced-frame union. */
+    * (oneVsRest, pairwise) frames with the pooled `p_holm` and string
+    * group ids. */
   def pooledTests(df: DataFrame, check: CategoricalConsistencyCheck,
       pre: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    val keyCols = check.scope :+ "panel"
-    val kc = keyCols.map(col)
-    val stacked = oneVsRestRaw(df, check, pre)
-    val heat = pairwiseRaw(df, check, pre)
-    val sNorm = stacked.select(kc :+ lit("stacked").as("family") :+
-      col("grp").cast("string").as("id1") :+ lit(null).cast("string").as("id2") :+
-      col("p_raw"): _*)
-    val hNorm = heat.select(kc :+ lit("heat").as("family") :+
-      col("grp1").cast("string").as("id1") :+ col("grp2").cast("string").as("id2") :+
-      col("p_raw"): _*)
-    val adjusted = holmWithinPanel(sNorm.unionByName(hNorm), keyCols).drop("p_raw")
-    val adjS = adjusted.filter(col("family") === "stacked")
-      .select(kc :+ col("id1").as("grp") :+ col("p_holm"): _*)
-    val adjH = adjusted.filter(col("family") === "heat")
-      .select(kc :+ col("id1").as("grp1") :+ col("id2").as("grp2") :+ col("p_holm"): _*)
-    (NullSafeJoin(stacked.withColumn("grp", col("grp").cast("string")),
-        adjS, keyCols :+ "grp"),
-      NullSafeJoin(heat.withColumn("grp1", col("grp1").cast("string"))
-        .withColumn("grp2", col("grp2").cast("string")),
-        adjH, keyCols :+ "grp1" :+ "grp2"))
+    val k = kernel(df, check, pre, withPairs = true)
+    (testCols(k, check, "p_pool").withColumn("grp", col("grp").cast("string")),
+      pairRows(k, check, "p_pool").withColumn("grp1", col("grp1").cast("string"))
+        .withColumn("grp2", col("grp2").cast("string")))
   }
 
   /** The reference's `_All_` overall bar (Categorical_Check.sas:317-340):
     * per panel, the all-groups-combined distribution of `valueCol` with
-    * row percents. Rides the cached counts frame — no extra input scan. */
+    * row percents. Rides the cached kernel frame — no extra input scan. */
   def overallBar(df: DataFrame, check: CategoricalConsistencyCheck,
-      pre: Option[DataFrame] = None): DataFrame = {
-    val keyCols = check.scope :+ "panel"
-    cells(df, check, pre)
-      .select((keyCols.map(col) :+ col("value") :+
-        col("panel_value_total") :+ col("panel_total")): _*)
-      .distinct() // cells grain is (…, grp, value); totals repeat per grp
-      .select((keyCols.map(col) :+
-        lit("_All_").as("grp") :+
-        col("value") :+
-        col("panel_value_total").as("cnt") :+
-        (col("panel_value_total") * 100.0 / col("panel_total")).as("row_pct") :+
+      pre: Option[DataFrame] = None): DataFrame =
+    kernel(df, check, pre, check.pairwise)
+      .select(keyCols(check) ++ Seq(col("__vals"), col("__k.total").as("panel_total"),
+        posexplode(col("__k.value_total")).as(Seq("pos", "cnt"))): _*)
+      .select(keyCols(check) ++ Seq(
+        lit("_All_").as("grp"),
+        element_at(col("__vals"), col("pos") + 1).as("value"),
+        col("cnt"),
+        (col("cnt") * 100.0 / col("panel_total")).as("row_pct"),
         col("panel_total")): _*)
-  }
 
-  /** Holm step-down within each panel (M10). Group count per panel is tiny,
-    * so collect_list per panel is safe at any input scale. */
-  private[operators] def holmWithinPanel(withP: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val holmUdf = udf((ps: Seq[Double]) => Holm.adjust(ps.map(p => if (p == null) Double.NaN else p)))
-    val spark = withP.sparkSession
-    val rest = withP.columns.filterNot(keyCols.contains).toSeq
-    withP
-      .groupBy(keyCols.map(col): _*)
-      .agg(collect_list(struct(rest.map(col): _*)).as("rows"))
-      .withColumn("adj", holmUdf(expr("transform(rows, r -> r.p_raw)")))
-      .select((keyCols.map(col) :+
-        expr("explode(arrays_zip(rows, adj)) as z")): _*)
-      .select((keyCols.map(col) :+ col("z.rows.*") :+ col("z.adj").as("p_holm")): _*)
-  }
+  private def partition(check: CategoricalConsistencyCheck, last: Column*): Column =
+    concat_ws("/", (check.scope.map(s => concat_ws("=", lit(s), col(s).cast("string"))) ++
+      (concat(lit("panel="), col("panel")) +: last)): _*).as("partition")
 
-  /** Both adjusted surfaces (one-vs-rest + optional pairwise grid),
-    * computed ONCE — the Runner derives verdicts AND violations from
-    * these, so the Fisher enumeration / Holm UDFs over the reduced frames
-    * run once per suite run instead of once per output.
-    * holmPooled reproduces the reference's exact multtest family (one-vs-
-    * rest + pairwise pooled per panel, :435-466); otherwise each surface
-    * is adjusted within its own family. */
-  def surfaces(df: DataFrame, check: CategoricalConsistencyCheck,
-      pre: Option[DataFrame] = None): (DataFrame, Option[DataFrame]) = {
-    val pooled = if (check.pairwise && check.holmPooled) Some(pooledTests(df, check, pre)) else None
-    val t = pooled.map(_._1).getOrElse(tests(df, check, pre))
-    val pair =
-      if (!check.pairwise) None
-      else Some(pooled.map(_._2).getOrElse(pairwiseTests(df, check, pre)))
-    (t, pair)
-  }
-
-  def verdicts(df: DataFrame, check: CategoricalConsistencyCheck,
-      pre: Option[DataFrame] = None): DataFrame = {
-    val (t, pair) = surfaces(df, check, pre)
-    verdictsFrom(t, pair, df, check, pre)
-  }
-
-  /** Verdicts from prebuilt surfaces (see `surfaces`). */
-  def verdictsFrom(t: DataFrame, pairT: Option[DataFrame], df: DataFrame,
-      check: CategoricalConsistencyCheck,
-      pre: Option[DataFrame] = None): DataFrame = {
-    val framed = t.select(
-      concat_ws("/",
-        (check.scope.map(s => concat_ws("=", lit(s), col(s).cast("string"))) ++
-          Seq(concat(lit("panel="), col("panel")),
-            concat(lit("grp="), col("grp").cast("string")))): _*).as("partition"),
+  private def framedVerdicts(t: DataFrame, check: CategoricalConsistencyCheck): DataFrame =
+    t.select(
+      partition(check, concat(lit("grp="), col("grp").cast("string"))),
       concat(col("test_used"), lit("_one_vs_rest")).as("metric"),
       col("stat"),
       col("p_holm").as("p_value"),
       lit(check.alphaBar).as("threshold"),
       col("n_grp").cast("long").as("n_obs"),
       (col("p_holm") >= check.alphaBar).as("pass"))
-    // the reference's `_All_` overall bar (:317-340): one informational
-    // verdict row per panel carrying the all-groups-combined n. MUST ride
-    // the fused cell counts (`pre`) like every other surface: without it
-    // this line re-scans the full input once per categorical check
-    val overall = overallBar(df, check, pre)
-      .groupBy((check.scope :+ "panel").map(col): _*)
-      .agg(first("panel_total").as("n_panel"))
-      .select(
-        concat_ws("/",
-          (check.scope.map(s => concat_ws("=", lit(s), col(s).cast("string"))) ++
-            Seq(concat(lit("panel="), col("panel")), lit("grp=_All_"))): _*).as("partition"),
-        lit("overall_bar").as("metric"),
-        lit(null).cast("double").as("stat"),
-        lit(null).cast("double").as("p_value"),
-        lit(check.alphaBar).as("threshold"),
-        col("n_panel").cast("long").as("n_obs"),
-        lit(true).as("pass"))
-    val pair = pairT.map { pt =>
-      pt.select(
-        concat_ws("/",
-          (check.scope.map(s => concat_ws("=", lit(s), col(s).cast("string"))) ++
-            Seq(concat(lit("panel="), col("panel")),
-              concat(lit("pair="), col("grp1").cast("string"),
-                lit("|"), col("grp2").cast("string")))): _*).as("partition"),
-        concat(col("test_used"), lit("_pairwise")).as("metric"),
-        col("stat"),
-        col("p_holm").as("p_value"),
-        lit(check.alphaBar).as("threshold"),
-        (col("n1") + col("n2")).cast("long").as("n_obs"),
-        (col("p_holm") >= check.alphaBar).as("pass"))
-    }
-    val all = (Seq(framed, overall) ++ pair.toSeq).reduce(_ unionByName _)
-    Results.toVerdicts(all, check.id, check.severity)
+
+  /** The `_All_` bar as one informational verdict row per panel carrying
+    * the all-groups-combined n (:317-340). */
+  private def overallVerdicts(k: DataFrame, check: CategoricalConsistencyCheck): DataFrame =
+    k.select(
+      partition(check, lit("grp=_All_")),
+      lit("overall_bar").as("metric"),
+      lit(null).cast("double").as("stat"),
+      lit(null).cast("double").as("p_value"),
+      lit(check.alphaBar).as("threshold"),
+      col("__k.total").as("n_obs"),
+      lit(true).as("pass"))
+
+  private def pairVerdicts(pt: DataFrame, check: CategoricalConsistencyCheck): DataFrame =
+    pt.select(
+      partition(check, concat(lit("pair="), col("grp1").cast("string"),
+        lit("|"), col("grp2").cast("string"))),
+      concat(col("test_used"), lit("_pairwise")).as("metric"),
+      col("stat"),
+      col("p_holm").as("p_value"),
+      lit(check.alphaBar).as("threshold"),
+      (col("n1") + col("n2")).cast("long").as("n_obs"),
+      (col("p_holm") >= check.alphaBar).as("pass"))
+
+  private def violationRows(w: DataFrame, check: CategoricalConsistencyCheck): DataFrame =
+    Results.toViolations(w.select(
+      col("grp").cast("string").as("key"),
+      partition(check),
+      concat(col("worst"), lit(" @ "),
+        round(col("worst_cnt") * 100.0 / col("n_grp"), 2).cast("string"), lit("%")).as("observed"),
+      concat(col("worst"), lit(" @ "),
+        round(col("worst_total") * 100.0 / col("n_panel"), 2).cast("string"), lit("%")).as("expected"),
+      concat(lit("inconsistent "), lit(check.valueCol), lit(" distribution, p_holm="),
+        round(col("p_holm"), 6).cast("string")).as("label")), check.id)
+
+  /** (verdicts, violations) from ONE cached kernel frame — the Runner's
+    * entry. holmPooled (with pairwise) reads the reference's exact pooled
+    * multtest family (:435-466); otherwise each surface is adjusted within
+    * its own family. */
+  private[graft] def outputs(df: DataFrame, check: CategoricalConsistencyCheck,
+      pre: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+    val k = kernel(df, check, pre, check.pairwise)
+    val p = if (check.pairwise && check.holmPooled) "p_pool" else "p_holm"
+    val ovr = ovrRows(k, check, p)
+    (verdictRows(ovr, k, if (check.pairwise) Some(pairRows(k, check, p)) else None, check),
+      violationRows(ovr.filter(col("p_holm") < check.alphaBar), check))
   }
+
+  private def verdictRows(t: DataFrame, k: DataFrame, pairT: Option[DataFrame],
+      check: CategoricalConsistencyCheck): DataFrame =
+    Results.toVerdicts((Seq(framedVerdicts(t, check), overallVerdicts(k, check)) ++
+      pairT.map(pairVerdicts(_, check))).reduce(_ unionByName _), check.id, check.severity)
+
+  def verdicts(df: DataFrame, check: CategoricalConsistencyCheck,
+      pre: Option[DataFrame] = None): DataFrame = outputs(df, check, pre)._1
+
+  /** Verdicts from prebuilt one-vs-rest / pairwise test frames. */
+  def verdictsFrom(t: DataFrame, pairT: Option[DataFrame], df: DataFrame,
+      check: CategoricalConsistencyCheck,
+      pre: Option[DataFrame] = None): DataFrame =
+    verdictRows(t, kernel(df, check, pre, check.pairwise), pairT, check)
 
   /** Violation rows: for every failing (panel, grp), its worst-deviating
     * category with observed vs expected row-percent. */
   def violations(df: DataFrame, check: CategoricalConsistencyCheck,
-      pre: Option[DataFrame] = None): DataFrame =
-    violationsFrom(surfaces(df, check, pre)._1, df, check, pre)
+      pre: Option[DataFrame] = None): DataFrame = outputs(df, check, pre)._2
 
+  /** Violations for the failing rows of a prebuilt test frame `base`. */
   def violationsFrom(base: DataFrame, df: DataFrame,
       check: CategoricalConsistencyCheck,
       pre: Option[DataFrame] = None): DataFrame = {
-    val keyCols = check.scope :+ "panel"
-    val t = base.filter(col("p_holm") < check.alphaBar)
-      .select((keyCols :+ "grp").map(col) :+ col("p_holm"): _*)
-    val c = cells(df, check, pre)
-      .withColumn("dev",
-        when(col("grp_total") > 0 && col("panel_value_total") > 0,
-          abs(col("cnt") / col("grp_total") -
-            col("panel_value_total") / col("panel_total")))
-          .otherwise(0.0))
-    val joined = NullSafeJoin(c, t, keyCols :+ "grp")
-    val w = Window.partitionBy((keyCols :+ "grp").map(col): _*).orderBy(col("dev").desc, col("value"))
-    val worst = joined.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-    val v = worst.select(
-      col("grp").cast("string").as("key"),
-      concat_ws("/",
-        (check.scope.map(s => concat_ws("=", lit(s), col(s).cast("string"))) :+
-          concat(lit("panel="), col("panel"))): _*).as("partition"),
-      concat(col("value"), lit(" @ "),
-        round(col("cnt") * 100.0 / col("grp_total"), 2).cast("string"), lit("%")).as("observed"),
-      concat(col("value"), lit(" @ "),
-        round(col("panel_value_total") * 100.0 / col("panel_total"), 2).cast("string"), lit("%")).as("expected"),
-      concat(lit("inconsistent "), lit(check.valueCol), lit(" distribution, p_holm="),
-        round(col("p_holm"), 6).cast("string")).as("label"))
-    Results.toViolations(v, check.id)
+    val keys = check.scope :+ "panel" :+ "grp"
+    val failing = base.filter(col("p_holm") < check.alphaBar)
+      .select(keys.map(col) :+ col("p_holm"): _*)
+    val worst = ovrRows(kernel(df, check, pre, check.pairwise), check, "p_holm").drop("p_holm")
+    violationRows(NullSafeJoin(worst, broadcast(failing), keys), check)
   }
 }

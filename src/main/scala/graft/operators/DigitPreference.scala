@@ -3,7 +3,7 @@ package graft.operators
 import graft.engine.CacheTracker.TrackedCacheOps
 import graft.checks.{DigitPreferenceCheck, Results}
 import graft.stats.Distributions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Terminal-digit-preference check — %digitpref (DigitPref.sas) re-expressed.
@@ -21,8 +21,12 @@ import org.apache.spark.sql.functions._
   * Flags (M13, DigitPref.sas:378-396): gof p < alpha, or none-share >
   * noneThreshold%.
   *
-  * One shuffle: groupBy(scope, panel, group, digit).count; everything after
-  * runs on ≤ 11 rows per group.
+  * Plan: groupBy(scope, panel, group, digit).count over the input (or the
+  * fused CellScan), then ONE groupBy(scope, panel, group) that hands each
+  * group's ≤ 11 sorted (digit, cnt) cells to a plain Scala kernel — the
+  * reference's per-group PROC FREQ — returning the zero-filled table, the
+  * tests and the top digit. That frame is cached; tests, verdicts,
+  * violations and digitCounts are projections of it.
   */
 object DigitPreference {
 
@@ -71,72 +75,100 @@ object DigitPreference {
         "grp" -> col(check.groupCol),
         "digit" -> digitAt(col(check.column).cast("double"), check.place)))
 
-  /** Reduced-frame rendering of the scan-native keys back to the public
-    * (panel label, string group) shape every downstream stage consumes. */
-  private def rendered(counts: DataFrame, check: DigitPreferenceCheck): DataFrame =
-    PanelBins.renderPanelCol(counts, check.interval)
-      .withColumn("grp", col("grp").cast("string"))
 
-  /** (scope, panel, grp, digit) counts with group totals — zero-filled over
-    * the fixed digit domain −1..9 (DigitPref.sas:253-257).
+  /** (scope..., panel, grp, digit, cnt): the CellScan slice, else own input pass. */
+  private def counts(df: DataFrame, check: DigitPreferenceCheck,
+      pre: Option[DataFrame]): DataFrame = pre.getOrElse {
+    df.filter(col(check.column).isNotNull && col(check.groupCol).isNotNull)
+      .withColumn("panel", panelCodeExpr(check))
+      .withColumn("grp", col(check.groupCol))
+      .withColumn("digit", digitAt(col(check.column).cast("double"), check.place))
+      .groupBy((check.scope :+ "panel" :+ "grp" :+ "digit").map(col): _*)
+      .agg(count(lit(1)).as("cnt"))
+      .trackedCache()
+  }
+
+  /** One group's digit table, zero-filled over the fixed domain −1..9
+    * (DigitPref.sas:253-257): `counts(d + 1)` is digit d's count. The
+    * other field names are the test frame's column names. */
+  final case class GroupDigits(counts: Seq[Long], n_gof: Long, n_total: Long, n_none: Long,
+      sum_sq: Double, gof_stat: Option[Double], none_pct: Double, gof_p: Double,
+      top_digit: Int, top_cnt: Long)
+
+  /** One group's GOF X² vs uniform (df=9, M8; e = n/10 so X² = Σo²·10/n − n),
+    * none-share (M12) and most-preferred digit (ties → lowest). */
+  private[operators] def groupKernel(cells: Seq[Row]): GroupDigits = {
+    val c = new Array[Long](11)
+    cells.foreach { r =>
+      val d = r.getInt(0)
+      if (d >= -1 && d <= 9) c(d + 1) += r.getLong(1)
+    }
+    val nGof = c.drop(1).sum
+    val nTotal = c.sum
+    val sumSq = c.drop(1).map(x => StrictMath.pow(x.toDouble, 2)).sum
+    val gofStat = if (nGof > 0) Some(sumSq * 10.0 / nGof - nGof) else None
+    val top = (1 to 10).foldLeft(1)((b, i) => if (c(i) > c(b)) i else b)
+    GroupDigits(c.toSeq, nGof, nTotal, c(0), sumSq, gofStat, c(0) * 100.0 / nTotal,
+      gofStat.map(Distributions.chiSqPValue(_, 9.0)).getOrElse(Double.NaN), top - 1, c(top))
+  }
+
+  private val kernelUdf = udf(groupKernel _)
+
+  /** The reduced-frame tail: ONE groupBy(scope, panel, grp) of the counts,
+    * then the per-group kernel. Uncached — [[kernel]] caches it. */
+  private[graft] def tail(c: DataFrame, check: DigitPreferenceCheck): DataFrame = {
+    val keyCols = (check.scope :+ "panel" :+ "grp").map(col)
+    // scan-native keys back to the public (panel label, string group) shape
+    PanelBins.renderPanelCol(c, check.interval).withColumn("grp", col("grp").cast("string"))
+      .groupBy(keyCols: _*)
+      .agg(sort_array(collect_list(struct(col("digit").cast("int").as("digit"),
+        col("cnt").cast("long").as("cnt")))).as("__d"))
+      .select(keyCols :+ kernelUdf(col("__d")).as("__k"): _*)
+  }
+
+  /** Cached per-group kernel frame — every public surface projects it. */
+  private[graft] def kernel(df: DataFrame, check: DigitPreferenceCheck,
+      pre: Option[DataFrame]): DataFrame =
+    tail(counts(df, check, pre), check).trackedCache()
+
+  /** (scope, panel, grp, digit) counts — zero-filled over the fixed digit
+    * domain −1..9 (DigitPref.sas:253-257).
     * @param pre pre-aggregated (scope..., panel, grp, digit, cnt) counts
     *            from the fused CellScan — skips this check's own input scan.
     */
   def digitCounts(df: DataFrame, check: DigitPreferenceCheck,
       pre: Option[DataFrame] = None): DataFrame = {
-    val keyCols = check.scope :+ "panel" :+ "grp"
-    // cached: ≤ 11 rows per (scope, panel, group); reused by the domain
-    // shell, the tests and the violations lineages (one row-level pass)
-    val counts = rendered(pre.getOrElse {
-      df.filter(col(check.column).isNotNull && col(check.groupCol).isNotNull)
-        .withColumn("panel", panelCodeExpr(check))
-        .withColumn("grp", col(check.groupCol))
-        .withColumn("digit", digitAt(col(check.column).cast("double"), check.place))
-        .groupBy((keyCols :+ "digit").map(col): _*)
-        .agg(count(lit(1)).as("cnt"))
-        .trackedCache()
-    }, check)
-    // fixed digit domain: explode literal array — no extra scan. Null-safe
-    // fill join: null scope/panel groups keep their own counts
-    val dom = counts.select(keyCols.map(col): _*).distinct()
-      .withColumn("digit", explode(lit((-1 to 9).toArray)))
-    NullSafeJoin.left(dom, counts, keyCols :+ "digit")
-      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
+    val keyCols = (check.scope :+ "panel" :+ "grp").map(col)
+    kernel(df, check, pre)
+      .select(keyCols :+ posexplode(col("__k.counts")).as(Seq("pos", "cnt")): _*)
+      .select(keyCols ++ Seq((col("pos") - 1).as("digit"), col("cnt")): _*)
   }
+
+  /** Test rows plus the most-preferred digit the violations report. */
+  private def testRows(k: DataFrame, check: DigitPreferenceCheck): DataFrame =
+    k.filter(col("__k.n_total") > check.minNum)
+      .select((check.scope :+ "panel" :+ "grp").map(col) :+ col("__k.*"): _*).drop("counts")
+      .withColumn("flag_gof", col("gof_p") < check.alpha)
+      .withColumn("flag_none", col("none_pct") > check.noneThreshold)
+      .withColumn("pass", !(col("flag_gof") || col("flag_none")))
 
   /** Per-(scope, panel, grp) test frame: GOF chi-square (digits 0-9 vs
     * uniform), none-share %, flags. */
   def tests(df: DataFrame, check: DigitPreferenceCheck,
-      pre: Option[DataFrame] = None): DataFrame = {
-    val keyCols = check.scope :+ "panel" :+ "grp"
-    val dc = digitCounts(df, check, pre)
-    val perGrp = dc.groupBy(keyCols.map(col): _*).agg(
-      sum(when(col("digit") >= 0, col("cnt")).otherwise(0L)).as("n_gof"),
-      sum(col("cnt")).as("n_total"),
-      sum(when(col("digit") === -1, col("cnt")).otherwise(0L)).as("n_none"),
-      sum(when(col("digit") >= 0,
-        pow(col("cnt").cast("double"), 2)).otherwise(0.0)).as("sum_sq"))
-    // X² vs uniform: e = n/10 per digit; Σ(o−e)²/e = (Σo²)·10/n − n
-    val withStat = perGrp
-      .filter(col("n_total") > check.minNum)
-      .withColumn("gof_stat",
-        when(col("n_gof") > 0, col("sum_sq") * 10.0 / col("n_gof") - col("n_gof")).otherwise(lit(null)))
-      .withColumn("none_pct", col("n_none") * 100.0 / col("n_total"))
-    val pUdf = udf((stat: java.lang.Double) =>
-      if (stat == null) Double.NaN else Distributions.chiSqPValue(stat, 9.0))
-    withStat
-      .withColumn("gof_p", pUdf(col("gof_stat")))
-      .withColumn("flag_gof", col("gof_p") < check.alpha)
-      .withColumn("flag_none", col("none_pct") > check.noneThreshold)
-      .withColumn("pass", !(col("flag_gof") || col("flag_none")))
+      pre: Option[DataFrame] = None): DataFrame =
+    testRows(kernel(df, check, pre), check).drop("top_digit", "top_cnt")
+
+  /** (verdicts, violations) from ONE cached kernel frame. */
+  private[graft] def outputs(df: DataFrame, check: DigitPreferenceCheck,
+      pre: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+    val t = testRows(kernel(df, check, pre), check)
+    (verdictsFrom(t, check), violationRows(t.filter(!col("pass")), check))
   }
 
   def verdicts(df: DataFrame, check: DigitPreferenceCheck,
-      pre: Option[DataFrame] = None): DataFrame =
-    verdictsFrom(tests(df, check, pre), check)
+      pre: Option[DataFrame] = None): DataFrame = outputs(df, check, pre)._1
 
-  /** Verdicts from a prebuilt `tests` frame — lets the Runner build the
-    * tests lineage ONCE for both outputs. */
+  /** Verdicts from a prebuilt `tests` frame. */
   def verdictsFrom(t: DataFrame, check: DigitPreferenceCheck): DataFrame = {
     val framed = t.select(
       partitionOf(check), lit("digit_gof_chisq").as("metric"),
@@ -160,30 +192,29 @@ object DigitPreference {
 
   /** Violations: failing groups with their most-preferred digit. */
   def violations(df: DataFrame, check: DigitPreferenceCheck,
-      pre: Option[DataFrame] = None): DataFrame =
-    violationsFrom(tests(df, check, pre), df, check, pre)
+      pre: Option[DataFrame] = None): DataFrame = outputs(df, check, pre)._2
 
+  /** Violations for the failing rows of a prebuilt `tests` frame `t`. */
   def violationsFrom(t: DataFrame, df: DataFrame, check: DigitPreferenceCheck,
       pre: Option[DataFrame] = None): DataFrame = {
     val keyCols = check.scope :+ "panel" :+ "grp"
     val failing = t.filter(!col("pass"))
       .select((keyCols.map(col) :+ col("gof_p") :+ col("none_pct")): _*)
-    val dc = digitCounts(df, check, pre).filter(col("digit") >= 0)
-    val joined = NullSafeJoin(dc, failing, keyCols)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*).orderBy(col("cnt").desc, col("digit"))
-    val v = joined.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(
-        col("grp").as("key"),
-        concat_ws("/",
-          (check.scope.map(s => concat_ws("=", lit(s), col(s).cast("string"))) :+
-            concat(lit("panel="), col("panel"))): _*).as("partition"),
-        concat(lit("digit "), col("digit").cast("string"), lit(" × "),
-          col("cnt").cast("string")).as("observed"),
-        lit("uniform 10% per digit").as("expected"),
-        concat(lit("terminal-digit preference, gof_p="),
-          round(col("gof_p"), 6).cast("string"),
-          lit(", none%="), round(col("none_pct"), 2).cast("string")).as("label"))
-    Results.toViolations(v, check.id)
+    val top = testRows(kernel(df, check, pre), check)
+      .select((keyCols :+ "top_digit" :+ "top_cnt").map(col): _*)
+    violationRows(NullSafeJoin(top, broadcast(failing), keyCols), check)
   }
+
+  private def violationRows(v: DataFrame, check: DigitPreferenceCheck): DataFrame =
+    Results.toViolations(v.select(
+      col("grp").as("key"),
+      concat_ws("/",
+        (check.scope.map(s => concat_ws("=", lit(s), col(s).cast("string"))) :+
+          concat(lit("panel="), col("panel"))): _*).as("partition"),
+      concat(lit("digit "), col("top_digit").cast("string"), lit(" × "),
+        col("top_cnt").cast("string")).as("observed"),
+      lit("uniform 10% per digit").as("expected"),
+      concat(lit("terminal-digit preference, gof_p="),
+        round(col("gof_p"), 6).cast("string"),
+        lit(", none%="), round(col("none_pct"), 2).cast("string")).as("label")), check.id)
 }

@@ -2,9 +2,8 @@ package graft.operators
 
 import graft.engine.CacheTracker.TrackedCacheOps
 import graft.checks.{DriftCheck, Results}
-import graft.stats.Distributions
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import graft.stats.{Distributions, Holm}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Numeric distribution-drift check across time windows (north rule) —
@@ -14,8 +13,11 @@ import org.apache.spark.sql.functions._
   * statistic from the cumulative histograms.
   *
   * Plan: one tiny global agg (min/max for bin edges), then ONE
-  * groupBy(scope, window, bin).count shuffle; all test arithmetic happens
-  * on (windows × bins) rows via window functions.
+  * groupBy(scope, window, bin).count shuffle (or the fused CellScan); then
+  * ONE groupBy(scope) hands each scope's sorted (window, bin, cnt) cells —
+  * windows × bins, tiny at any input scale — to a plain Scala kernel that
+  * zero-fills, tests and Holm-adjusts. That frame is cached; histogram,
+  * tests, verdicts and violations are projections of it.
   */
 object Drift {
 
@@ -76,103 +78,107 @@ object Drift {
         "bin" -> binExpr(check, v, col(mnName), col(wName))))
   }
 
-  /** Histogram cells: (scope..., panel, bin, cnt) with margins.
+
+  /** (scope..., panel, bin, cnt): the CellScan slice, else own input pass. */
+  private def counts(df: DataFrame, check: DriftCheck, pre: Option[DataFrame]): DataFrame =
+    pre.getOrElse {
+      val v = col(check.column).cast("double")
+      df.filter(v.isNotNull && !isnan(v))
+        .crossJoin(broadcast(edges(df, check)))
+        .withColumn("panel", PanelBins.panelCode(col(check.dateCol), check.interval))
+        .withColumn("bin", binExpr(check, v, col("__mn"), col("__w")))
+        .groupBy((check.scope :+ "panel" :+ "bin").map(col): _*)
+        .agg(count(lit(1)).as("cnt"))
+    }
+
+  // field names are the histogram / tests column names
+  final case class Cell(panel: String, bin: Int, cnt: Long)
+  final case class WindowTest(panel: String, stat: Double, df: Double, ks: Double,
+      n_panel: Long, n_rest: Long, p_raw: Double, p_holm: Double)
+  final case class ScopeResult(histogram: Seq[Cell], tests: Seq[WindowTest])
+
+  /** One scope's (panel, bin, cnt) cells, sorted by panel → each window's
+    * histogram zero-filled over the bin domain (an empty bin still adds its
+    * (0−e)²/e term, KS mass and df slot), chi-square and KS against the
+    * pooled rest, Holm across the scope's windows. */
+  private[operators] def scopeKernel(cells: Seq[Row], bins: Int): ScopeResult = {
+    // consecutive runs of one panel (null panels — null dates — form their own)
+    val panels = cells.foldLeft(Vector.empty[(String, Array[Long])]) { (acc, r) =>
+      val p = r.getString(0)
+      val acc2 = if (acc.nonEmpty && acc.last._1 == p) acc else acc :+ (p -> new Array[Long](bins))
+      val b = r.getInt(1)
+      if (b >= 0 && b < bins) acc2.last._2(b) += r.getLong(2)
+      acc2
+    }
+    val binTotal = Array.tabulate(bins)(b => panels.map(_._2(b)).sum)
+    val grand = binTotal.sum
+    val df = binTotal.count(_ > 0) - 1.0
+    def x2(o: Double, e: Double) = if (e > 0) StrictMath.pow(o - e, 2) / e else 0.0
+    val raw = panels.flatMap { case (p, h) =>
+      val nPanel = h.sum
+      val (n1, n2) = (nPanel.toDouble, (grand - nPanel).toDouble)
+      if (grand - nPanel <= 0 || df < 1) None
+      else {
+        val stat = (0 until bins).map(b =>
+          x2(h(b).toDouble, n1 * binTotal(b) / grand) +
+            x2((binTotal(b) - h(b)).toDouble, n2 * binTotal(b) / grand)).sum
+        // KS: largest gap between the cumulative shares, in bin order
+        val (_, _, ks) = (0 until bins).foldLeft((0.0, 0.0, 0.0)) { case ((c1, c2, mx), b) =>
+          val (d1, d2) = (c1 + h(b), c2 + (binTotal(b) - h(b)))
+          (d1, d2, math.max(mx, math.abs(d1 / n1 - d2 / n2)))
+        }
+        Some(WindowTest(p, stat, df, ks, nPanel, grand - nPanel,
+          Distributions.chiSqPValue(stat, df), 0.0))
+      }
+    }
+    val holm = Holm.adjust(raw.map(_.p_raw))
+    ScopeResult(
+      for ((p, h) <- panels; b <- 0 until bins) yield Cell(p, b, h(b)),
+      raw.indices.map(i => raw(i).copy(p_holm = holm(i))))
+  }
+
+  private val kernelUdf = udf(scopeKernel _)
+
+  /** The reduced-frame tail: ONE groupBy(scope) of the window × bin
+    * counts, then the per-scope kernel. Uncached — [[kernel]] caches it. */
+  private[graft] def tail(c: DataFrame, check: DriftCheck): DataFrame =
+    PanelBins.renderPanelCol(c, check.interval)
+      .groupBy(check.scope.map(col): _*)
+      .agg(sort_array(collect_list(struct(col("panel"), col("bin").cast("int").as("bin"),
+        col("cnt").cast("long").as("cnt")))).as("__h"))
+      .select(check.scope.map(col) :+ kernelUdf(col("__h"), lit(check.bins)).as("__k"): _*)
+
+  /** Cached per-scope kernel frame — histogram and tests project it. */
+  private[graft] def kernel(df: DataFrame, check: DriftCheck,
+      pre: Option[DataFrame]): DataFrame =
+    tail(counts(df, check, pre), check).trackedCache()
+
+  /** Histogram cells (scope..., panel, bin, cnt), zero-filled over the bin
+    * domain of every window.
     * @param pre pre-aggregated (scope..., panel, bin, cnt) counts from the
     *            fused CellScan — skips this check's own input scan. */
   def histogram(df: DataFrame, check: DriftCheck,
-      pre: Option[DataFrame] = None): DataFrame = {
-    val v = col(check.column).cast("double")
-    val keyCols = check.scope :+ "panel"
-    val counts = pre.getOrElse {
-      val base0 = df.filter(v.isNotNull && !isnan(v))
-      val e = edges(df, check)
-      base0
-        .crossJoin(broadcast(e))
-        .withColumn("panel", PanelBins.panelCode(col(check.dateCol), check.interval))
-        .withColumn("bin", binExpr(check, v, col("__mn"), col("__w")))
-        .groupBy((keyCols :+ "bin").map(col): _*)
-        .agg(count(lit(1)).as("cnt"))
-    }
-    // panel label rendering on the reduced frame (no-op for string pres)
-    val countsR = PanelBins.renderPanelCol(counts, check.interval)
-    // zero-fill over the full bin domain per (scope, panel) — like the
-    // categorical shell join (J6): a bin empty in one window but populated
-    // in the rest must contribute its (0−e)²/e term, its mass to the KS
-    // cumulatives, and its slot to df; without the fill, strong-drift
-    // windows UNDER-flag (round-1 ADVICE fix). Null-safe: null scope /
-    // panel groups must match their own counts, not be zeroed out.
-    val panelDom = countsR.select(keyCols.map(col): _*).distinct()
-      .withColumn("bin", explode(lit((0 until check.bins).toArray)))
-    NullSafeJoin.left(panelDom, countsR, keyCols :+ "bin")
-      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-      .trackedCache() // windows × bins rows; tests + violations reuse one pass
-  }
+      pre: Option[DataFrame] = None): DataFrame =
+    kernel(df, check, pre)
+      .select(check.scope.map(col) :+ explode(col("__k.histogram")).as("h"): _*)
+      .select(check.scope.map(col) :+ col("h.*"): _*)
 
-  /** Per-(scope, panel) drift tests vs pooled rest. */
+  /** Per-(scope, panel) drift tests vs pooled rest, Holm within scope. */
   def tests(df: DataFrame, check: DriftCheck,
-      pre: Option[DataFrame] = None): DataFrame = {
-    val keyCols = check.scope :+ "panel"
-    val h = histogram(df, check, pre)
-    val wScopeBin = Window.partitionBy((check.scope :+ "bin").map(col): _*)
-    val wPanel = Window.partitionBy(keyCols.map(col): _*)
-    // grand total per scope via a broadcast-joined aggregate: with an empty
-    // scope a window here would be unpartitioned (single-partition
-    // WindowExec warning noise that could mask a real regression). The join
-    // must be null-safe (<=>): groupBy keeps null scope groups, and dirty
-    // validation inputs hold null scope values by definition — an equi-join
-    // would silently drop them from tests, verdicts, and violations.
-    val grand = h.groupBy(check.scope.map(col): _*).agg(sum("cnt").as("grand_total"))
-    val withGrand =
-      if (check.scope.isEmpty) h.crossJoin(broadcast(grand))
-      else {
-        val g = broadcast(grand.select(
-          check.scope.map(s => col(s).as(s"__g_$s")) :+ col("grand_total"): _*))
-        h.join(g, check.scope.map(s => col(s) <=> col(s"__g_$s")).reduce(_ && _))
-          .drop(check.scope.map(s => s"__g_$s"): _*)
-      }
-    val withTotals = withGrand
-      .withColumn("bin_total", sum("cnt").over(wScopeBin))   // this bin, all windows
-      .withColumn("panel_total", sum("cnt").over(wPanel))    // this window
-      .withColumn("o1", col("cnt").cast("double"))
-      .withColumn("o2", (col("bin_total") - col("cnt")).cast("double"))
-      .withColumn("n1", col("panel_total").cast("double"))
-      .withColumn("n2", (col("grand_total") - col("panel_total")).cast("double"))
-    val withTerms = withTotals
-      .withColumn("e1", col("n1") * col("bin_total") / col("grand_total"))
-      .withColumn("e2", col("n2") * col("bin_total") / col("grand_total"))
-      .withColumn("x2_term",
-        when(col("e1") > 0, pow(col("o1") - col("e1"), 2) / col("e1")).otherwise(0.0) +
-        when(col("e2") > 0, pow(col("o2") - col("e2"), 2) / col("e2")).otherwise(0.0))
-      // KS: cumulative share difference per bin (ordered by bin)
-      .withColumn("cum1", sum("o1").over(wPanel.orderBy("bin")) / col("n1"))
-      .withColumn("cum2", sum("o2").over(wPanel.orderBy("bin")) / col("n2"))
-      .withColumn("ks_term", abs(col("cum1") - col("cum2")))
-    val perPanel = withTerms.groupBy(keyCols.map(col): _*).agg(
-      sum("x2_term").as("stat"),
-      (countDistinct(when(col("bin_total") > 0, col("bin"))) - 1).cast("double").as("df"),
-      max("ks_term").as("ks"),
-      first("n1").cast("long").as("n_panel"),
-      first("n2").cast("long").as("n_rest"))
-      .filter(col("n_rest") > 0 && col("df") >= 1)
-    val pUdf = udf((s: Double, d: Double) => Distributions.chiSqPValue(s, d))
-    val withP = perPanel.withColumn("p_raw", pUdf(col("stat"), col("df")))
-    CategoricalConsistency.holmWithinPanel(withP, check.scope.toList match {
-      case Nil => Seq.empty[String] // Holm across all windows when unscoped
-      case s => s
-    }) match {
-      case adjusted => adjusted
-        .withColumn("flag_chisq", col("p_holm") < check.alpha)
-        .withColumn("flag_ks", col("ks") > check.ksThreshold)
-        .withColumn("pass", !(col("flag_chisq") || col("flag_ks")))
-    }
-  }
+      pre: Option[DataFrame] = None): DataFrame =
+    kernel(df, check, pre)
+      .select(check.scope.map(col) :+ explode(col("__k.tests")).as("t"): _*)
+      .select(check.scope.map(col) :+ col("t.*"): _*)
+      .withColumn("flag_chisq", col("p_holm") < check.alpha)
+      .withColumn("flag_ks", col("ks") > check.ksThreshold)
+      .withColumn("pass", !(col("flag_chisq") || col("flag_ks")))
 
   def verdicts(df: DataFrame, check: DriftCheck,
       pre: Option[DataFrame] = None): DataFrame =
     verdictsFrom(tests(df, check, pre), check)
 
   /** Verdicts from a prebuilt `tests` frame — lets the Runner build the
-    * tests lineage ONCE for both outputs (GroupVariance pattern). */
+    * tests lineage ONCE for both outputs. */
   def verdictsFrom(t: DataFrame, check: DriftCheck): DataFrame = {
     val framed = t.select(
       concat_ws("/",

@@ -2,8 +2,8 @@ package graft.operators
 
 import graft.engine.CacheTracker.TrackedCacheOps
 import graft.checks.{GroupVarianceCheck, Results}
-import graft.stats.{Distributions, KllSketchAgg, VarComp}
-import org.apache.spark.sql.DataFrame
+import graft.stats.{Distributions, Holm, KllSketchAgg, VarComp}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Group-variance homogeneity check — %groupComparisons re-expressed.
@@ -15,11 +15,14 @@ import org.apache.spark.sql.functions._
   * PROC per comparison — k full scans; here the one-vs-rest expansion is an
   * `explode` (A10) so all comparisons ride one lineage.
   *
-  * BF = one-way ANOVA F on z = |r* − median(side)|. Medians come from
-  * per-group mergeable KLL sketches (ONE un-exploded pass; exact until
-  * compaction — see `SketchK`): side=1 reads the group's own sketch,
-  * side=0 merges the complement's sketches on the k²-row reduced frame,
-  * and both join back broadcast into the single exploded pass.
+  * BF = one-way ANOVA F on z = |r* − median(side)|. Plan after the OLS /
+  * whitening passes, over the cached residual frame:
+  *   - per-group mergeable KLL sketches (exact until compaction, `SketchK`);
+  *   - [[sideMedians]]: ONE groupBy(scope) → Scala kernel → per-group
+  *     median vectors, joined back broadcast;
+  *   - the single |r − m| pass over the residuals (side sums per group);
+  *   - [[brownForsythe]]: ONE groupBy(scope) → Scala kernel (F, p, Holm),
+  *     cached for verdicts and violations.
   */
 object GroupVariance {
 
@@ -84,120 +87,109 @@ object GroupVariance {
     * compaction starts (SURVEY M6 allows approx medians at this grain; the
     * q49 py-oracle compares at rtol 5e-3). Chosen over percentile_approx
     * because KLL partials MERGE: the "rest" side's median comes from
-    * combining the k−1 complement groups' sketches on the k²-row reduced
-    * frame instead of re-aggregating the k×n exploded frame. */
+    * combining the k−1 complement groups' sketches inside the per-scope
+    * kernel instead of re-aggregating the k×n exploded frame. */
   val SketchK = 16384
+
+  /** Tail 1: ONE groupBy(scope) hands each scope's sorted (grp, sketch)
+    * rows to [[scopeMedians]]. One row per group: meds(j) is the median of
+    * the side `__grp` falls on when cmps(j) is compared with the rest. */
+  private[graft] def sideMedians(perGrp: DataFrame): DataFrame =
+    perGrp.groupBy(col("__key"))
+      .agg(sort_array(collect_list(struct(col("__grp"), col("__sk")))).as("__g"))
+      .select(col("__key"), explode(medUdf(col("__g"))).as("m"))
+      .select(col("__key"), col("m.*"))
+
+  final case class GroupMeds(__grp: String, cmps: Seq[String], meds: Seq[Double])
+
+  /** One scope's medians from its sorted (grp, sketch) rows: side=1 reads
+    * a comparison group's own sketch, side=0 merges the k−1 complement
+    * sketches. A scope with a single group has no "rest" and yields
+    * nothing (groupComparisons.sas:264). */
+  private[operators] def scopeMedians(rows: Seq[Row]): Seq[GroupMeds] = {
+    val grps = rows.map(_.getString(0))
+    val sks = rows.map(r => r.getAs[Array[Byte]](1))
+    if (grps.size < 2) Seq.empty
+    else {
+      def med(parts: Seq[Array[Byte]]) =
+        KllSketchAgg.quantiles(KllSketchAgg.merge(parts, SketchK), Array(0.5))(0)
+      val med1 = sks.map(s => med(Seq(s)))
+      val med0 = sks.indices.map(j => med(sks.indices.filter(_ != j).map(sks)))
+      grps.indices.map(g => GroupMeds(grps(g), grps,
+        grps.indices.map(j => if (j == g) med1(j) else med0(j))))
+    }
+  }
+
+  private val medUdf = udf(scopeMedians _)
+
+  // field names are the tests frame's column names
+  final case class Comparison(cmp: String, n: Long, stat: Double, p_raw: Double, p_holm: Double)
+
+  /** One scope's Brown–Forsythe tests from its sorted (grp, n_g, [Σz | Σz²])
+    * rows: comparison j splits the groups into side 1 (cmps(j) itself) and
+    * side 0 (the rest); two-sample one-way ANOVA F on z, then Holm across
+    * the scope's comparisons. */
+  private[operators] def scopeBf(rows: Seq[Row], cmps: Seq[String]): Seq[Comparison] = {
+    val k = cmps.size
+    val out = cmps.indices.map { j =>
+      // side → (n_s, Σz, Σz²)
+      val sides = rows.groupBy(_.getString(0) == cmps(j)).map { case (own, rs) =>
+        own -> (rs.map(_.getLong(1)).sum, rs.map(_.getSeq[Double](2)(j)).sum,
+          rs.map(_.getSeq[Double](2)(k + j)).sum)
+      }
+      val n = sides.values.map(_._1).sum
+      val (f, p) =
+        if (sides.size != 2 || n <= 2) (Double.NaN, Double.NaN)
+        else {
+          val grand = sides.values.map(_._2).sum / n
+          var ssb = 0.0; var ssw = 0.0
+          sides.values.foreach { case (ns, sz, szz) =>
+            val m = sz / ns
+            ssb += ns * (m - grand) * (m - grand)
+            ssw += szz - ns * m * m
+          }
+          val dfw = (n - 2).toDouble
+          val f = if (ssw > 0) (ssb / 1.0) / (ssw / dfw) else Double.PositiveInfinity
+          (f, Distributions.fPValue(f, 1.0, dfw))
+        }
+      Comparison(cmps(j), n, f, p, 0.0)
+    }
+    val holm = Holm.adjust(out.map(_.p_raw))
+    out.indices.map(i => out(i).copy(p_holm = holm(i)))
+  }
+
+  private val bfUdf = udf(scopeBf _)
+
+  /** Brown–Forsythe, tail 2: ONE groupBy(scope) of the per-group side
+    * sums hands each scope's sorted rows to [[scopeBf]]. */
+  private[graft] def brownForsythe(grpSums: DataFrame): DataFrame =
+    grpSums.groupBy(col("__key"))
+      .agg(sort_array(collect_list(struct(col("__grp"), col("n_g"), col("arr")))).as("__g"),
+        first(col("cmps")).as("cmps"))
+      .select(col("__key"), explode(bfUdf(col("__g"), col("cmps"))).as("t"))
+      .select(col("__key"), col("t.*"))
 
   /** Per-(scope, grp) Brown-Forsythe group-vs-rest results with Holm. */
   def tests(df: DataFrame, check: GroupVarianceCheck): DataFrame = {
-    // cache the narrow (scope, grp, rscaled) frame: it feeds TWO branches
-    // of this plan (the per-group sketch pass and the exploded z-score
-    // pass) and Catalyst does not materialize common subplans — uncached,
-    // the whole OLS + whitening pipeline would execute twice. The reference
-    // materializes the vciry residual dataset before PROC GLM
-    // (groupComparisons.sas:393-401); MEMORY_AND_DISK spills at scale.
+    // cached: the sketch pass and the |r − m| pass both read it, and
+    // uncached the OLS + whitening pipeline would run twice (the reference
+    // materializes its vciry residuals too, groupComparisons.sas:393-401)
     val r = scaledResiduals(df, check)
       .select(col("__key"), col("__grp"), col("rscaled")).trackedCache()
-    // ONE un-exploded pass: per-(scope, group) mergeable KLL sketch. This
-    // frame is tiny (one row per group) and REPLACES both the old distinct
-    // pass (the comparison domain is its key set) and the old exploded
-    // medians pass (side medians fall out of sketch merges below) —
-    // leaving a single k×n pass (sideStats) over the cached residuals.
+    // one mergeable KLL sketch per (scope, group): the comparison domain
     val perGrp = r.groupBy(col("__key"), col("__grp"))
       .agg(KllSketchAgg.sketch(col("rscaled"), SketchK).as("__sk"))
       .trackedCache()
-    // comparison domain: distinct (scope, group), kept distributed and
-    // broadcast-joined (round-1 fix: no driver collect; the reference's
-    // distinct-into list, groupComparisons.sas:243-248, is a driver array).
-    // Scopes with a single group have no "rest" → dropped here
-    // (groupComparisons.sas:264).
-    val kPerKey = perGrp.groupBy("__key").agg(count(lit(1)).as("__kgrp"))
-    val dom = perGrp.select(col("__key"), col("__grp").as("cmp"))
-      .join(broadcast(kPerKey), "__key").filter(col("__kgrp") >= 2).drop("__kgrp")
-    // side medians on the k²-row reduced frame: side=1 reads the group's
-    // own sketch, side=0 merges the k−1 complement sketches — no pass over
-    // the row-proportional frame at all
-    val medUdf = udf((sks: Seq[Array[Byte]]) =>
-      KllSketchAgg.quantiles(KllSketchAgg.merge(sks, SketchK), Array(0.5))(0))
-    // round-6 fusion: the old medians → medWide → grpMeds chain was THREE
-    // reduced-frame aggregations + two joins; both sides of a comparison
-    // now aggregate in ONE groupBy(key, cmp) (conditional collect_list —
-    // nulls are skipped, so med1 sees exactly the group's own sketch and
-    // med0 the complement merge, as before), and the per-group median
-    // vector is a broadcast MAP over the per-key array instead of a third
-    // aggregation exchange. Same values: sort_array orders by the unique
-    // cmp exactly as the old struct(cmp, med) sort did.
-    val medWide = perGrp.join(broadcast(dom), Seq("__key"))
-      .withColumn("__own", col("__grp") === col("cmp"))
-      .groupBy("__key", "cmp")
-      .agg(medUdf(collect_list(when(col("__own"), col("__sk")))).as("med1"),
-        medUdf(collect_list(when(!col("__own"), col("__sk")))).as("med0"))
-    // one-vs-rest WITHOUT the explode (round-4 shape): each row of group h
-    // needs |r − m| against k different side medians (side=1's own median
-    // when c = h, side=0's rest median otherwise) — but that whole median
-    // VECTOR is constant per (scope, group), so it rides in as ONE ordered
-    // array on the tiny per-group frame and the k-length loop runs inside
-    // a mergeable typed-imperative aggregate (stats.AbsDevSumsAgg). The
-    // row-proportional frame is read ONCE at 1× — the previous
-    // broadcast-join explode materialized k× rows through two hash probes
-    // per comparison, the dominant suite cost at 100 M pages.
-    val medArr = medWide.groupBy(col("__key"))
-      .agg(sort_array(collect_list(struct(col("cmp"), col("med1"), col("med0")))).as("cm"))
-    val grpMeds = perGrp.select(col("__key"), col("__grp"))
-      .join(broadcast(medArr), Seq("__key"))
-      .select(col("__key"), col("__grp"),
-        col("cm.cmp").as("cmps"),
-        transform(col("cm"), x =>
-          when(x.getField("cmp") === col("__grp"), x.getField("med1"))
-            .otherwise(x.getField("med0"))).as("meds"))
-    val grpSums = r.join(broadcast(grpMeds), Seq("__key", "__grp"))
+    // one-vs-rest WITHOUT an explode: a row of group h needs |r − m| for
+    // k side medians, a vector constant per (scope, group) that joins in
+    // broadcast; stats.AbsDevSumsAgg loops over it, reading rows ONCE
+    val grpSums = r.join(broadcast(sideMedians(perGrp)), Seq("__key", "__grp"))
       .groupBy(col("__key"), col("__grp"))
       .agg(count(lit(1)).as("n_g"),
         graft.stats.AbsDevSumsAgg.sums(col("rscaled"), col("meds")).as("arr"),
         first("cmps").as("cmps"))
-    // unpack the [Σz | Σz²] buffer on the k-rows-per-scope reduced frame
-    // (k² tiny rows after the posexplode) and fold to per-(cmp, side) sums
-    val kCol = size(col("cmps"))
-    val sideStats = grpSums
-      .select(col("__key"), col("__grp"), col("n_g"), col("cmps"),
-        slice(col("arr"), lit(1), kCol).as("z1s"),
-        slice(col("arr"), kCol + lit(1), kCol).as("z2s"))
-      .select(col("__key"), col("__grp"), col("n_g"),
-        posexplode(arrays_zip(col("cmps"), col("z1s"), col("z2s"))))
-      .select(col("__key"), col("__grp"), col("n_g"),
-        col("col.cmps").as("cmp"), col("col.z1s").as("z1"), col("col.z2s").as("z2"))
-      .withColumn("side", when(col("__grp") === col("cmp"), 1).otherwise(0))
-      .groupBy("__key", "cmp", "side")
-      .agg(sum("n_g").as("n_s"), sum("z1").as("sz"), sum("z2").as("szz"))
-    // two-sample one-way ANOVA F from side stats
-    val perCmp = sideStats.groupBy("__key", "cmp").agg(
-      sum("n_s").as("n"),
-      sum("sz").as("sz_all"),
-      collect_list(struct(col("side"), col("n_s"), col("sz"), col("szz"))).as("sides"))
-    val fUdf = udf((n: Long, szAll: Double, sides: Seq[org.apache.spark.sql.Row]) => {
-      if (sides.size != 2 || n <= 2) (Double.NaN, Double.NaN)
-      else {
-        val grand = szAll / n
-        var ssb = 0.0; var ssw = 0.0
-        sides.foreach { s =>
-          val ns = s.getLong(1); val sz = s.getDouble(2); val szz = s.getDouble(3)
-          val m = sz / ns
-          ssb += ns * (m - grand) * (m - grand)
-          ssw += szz - ns * m * m
-        }
-        val dfw = (n - 2).toDouble
-        val f = if (ssw > 0) (ssb / 1.0) / (ssw / dfw) else Double.PositiveInfinity
-        (f, Distributions.fPValue(f, 1.0, dfw))
-      }
-    })
-    val withF = perCmp
-      .withColumn("__fp", fUdf(col("n"), col("sz_all"), col("sides")))
-      .withColumn("stat", col("__fp._1"))
-      .withColumn("p_raw", col("__fp._2"))
-      .drop("__fp", "sides", "sz_all")
-    // per-comparison rows only (k per scope) — cached so verdicts +
-    // violations share one computation (cache-manager plan dedup)
-    CategoricalConsistency.holmWithinPanel(withF, Seq("__key")).trackedCache()
+    // k rows per scope, cached for verdicts + violations
+    brownForsythe(grpSums).trackedCache()
   }
 
   def verdicts(df: DataFrame, check: GroupVarianceCheck): DataFrame =

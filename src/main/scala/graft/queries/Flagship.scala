@@ -21,10 +21,10 @@ object Flagship {
       UniquenessCheck("unique_url", Seq("url")),
       ReferentialCheck("host_registered", "host_id", "hosts", "host_id"),
       // pairwise=true + holmPooled=true adds the reference's heat-map pair
-      // grid (q54/q55 exercise it); it rides the same fused cell scan but
-      // its C(k,2) reduced-frame stages add ~15 s of fixed stage latency
-      // per suite run at local[32] bench scale, so the flagship keeps the
-      // one-vs-rest default and the grid stays opt-in
+      // grid (q54/q55 exercise it); it rides the same fused cell scan and
+      // per-panel kernel plus one global group-domain aggregate. The
+      // flagship keeps the one-vs-rest default, so suite throughput stays
+      // comparable across rounds, and the grid stays opt-in
       CategoricalConsistencyCheck("lang_consistency", "lang", "host_bucket",
         dateCol = Some("warc_ts"), interval = "quarter", alphaBar = 0.05),
       DigitPreferenceCheck("score_digits", "score", place = 0.1,

@@ -344,4 +344,64 @@ class PlanSpec extends SparkSpec {
         s.contains("WholeStageCodegen")
       }, "hot path must be codegen'd")
   }
+
+  test("reduced-frame tails: ONE exchange above the cached reduced frame, no Window, no SortMergeJoin") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.checks._
+    import graft.operators._
+    // physical nodes down to the cached leaves (InMemoryTableScan is a leaf:
+    // what lies below a cached frame ran when it was cached)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case n => n +: n.children.flatMap(nodes)
+    }
+    def shape(df: org.apache.spark.sql.DataFrame): (Int, Boolean) = {
+      val ns = nodes(df.queryExecution.executedPlan)
+      (ns.count(_.isInstanceOf[ShuffleExchangeExec]),
+        ns.exists(n => n.isInstanceOf[WindowExec] || n.isInstanceOf[SortMergeJoinExec]))
+    }
+    graft.engine.CacheTracker.scope {
+      val pages = graft.sources.Pages.generate(spark, 1000)
+      val cat = CategoricalConsistencyCheck("cc", "lang", "host_bucket",
+        dateCol = Some("warc_ts"), interval = "quarter")
+      val dig = DigitPreferenceCheck("dp", "score", place = 0.1, groupCol = "host_id")
+      val dr = DriftCheck("dr", "score", "warc_ts", interval = "quarter")
+      val fams = Seq(CategoricalConsistency.cellFamily(cat), DigitPreference.cellFamily(dig),
+        Drift.cellFamily(dr, "__dr0_mn", "__dr0_w"))
+      val counts = CellScan.counts(
+        pages.crossJoin(broadcast(Drift.edges(pages, dr, "__dr0_mn", "__dr0_w"))), fams)
+      val pre = fams.indices.map(i => Some(CellScan.slice(counts, i, fams)))
+      // each tail: exactly one exchange above the cached counts (planned
+      // before the kernel frames are cached, which would substitute them)
+      val tails = Seq(
+        "categorical" -> CategoricalConsistency.tail(pre(0).get, cat, withPairs = false),
+        "digit" -> DigitPreference.tail(pre(1).get, dig),
+        "drift" -> Drift.tail(pre(2).get, dr))
+      // GroupVariance's two tails, over cached frames of their input shape
+      val perGrp = pages.select(lit("k").as("__key"), col("host_bucket").cast("string").as("__grp"),
+          col("score")).groupBy("__key", "__grp")
+        .agg(graft.stats.KllSketchAgg.sketch(col("score"), GroupVariance.SketchK).as("__sk"))
+        .cache()
+      val grpSums = perGrp.select(col("__key"), col("__grp"), lit(3L).as("n_g"),
+        array(lit(1.0), lit(2.0)).as("arr"), array(col("__grp")).as("cmps")).cache()
+      val gvTails = Seq("group-variance medians" -> GroupVariance.sideMedians(perGrp),
+        "group-variance BF" -> GroupVariance.brownForsythe(grpSums))
+      for ((name, t) <- tails ++ gvTails)
+        assert(shape(t) == (1, false),
+          s"$name tail must shuffle once, with no Window / SortMergeJoin:\n" +
+            t.queryExecution.executedPlan.toString.take(1500))
+      // the Runner's outputs read the cached kernel frame: no exchange at all
+      val outs = Seq(
+        CategoricalConsistency.outputs(pages, cat, pre(0)),
+        DigitPreference.outputs(pages, dig, pre(1)),
+        { val t = Drift.tests(pages, dr, pre(2)); (Drift.verdictsFrom(t, dr), Drift.violationsFrom(t, dr)) })
+      for (((v, x), name) <- outs.zip(Seq("categorical", "digit", "drift")); o <- Seq(v, x))
+        assert(shape(o) == (0, false), s"$name outputs must only project the cached kernel frame")
+      perGrp.unpersist(); grpSums.unpersist()
+    }
+  }
 }

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.checks._
 import graft.queries.Flagship
 import graft.sources.Pages
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end engine properties over the synthetic pages table:
@@ -295,5 +296,52 @@ class EngineSpec extends SparkSpec {
     // worker-thread caches were re-homed into the run's scope → released
     assert(spark.sharedState.cacheManager.isEmpty,
       "parallel-built caches must release like sequential ones")
+  }
+
+  test("a failing parallel build releases every cache the run planted") {
+    // the model check's eager OLS pass trips the planted failure at build
+    // time, after the reduced-frame families' builds have cached frames
+    val boom = udf((v: Double) => {
+      if (!v.isNaN) throw new IllegalStateException("planted build failure")
+      v
+    })
+    val input = Pages.generate(spark, 4000).withColumn("boom", boom(col("score")))
+    val suite = Runner.Suite(checks = Seq(
+      CategoricalConsistencyCheck("cc", "lang", "host_bucket",
+        dateCol = Some("warc_ts"), interval = "quarter"),
+      DigitPreferenceCheck("dp", "score", place = 0.1, groupCol = "host_id"),
+      DriftCheck("dr", "score", "warc_ts", interval = "quarter"),
+      GroupVarianceCheck("gv", "boom", "host_bucket")), keyCol = "url")
+    spark.catalog.clearCache()
+    CacheTracker.scope {
+      intercept[Exception](Runner.run(input, suite))
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "caches of finished sibling builds must be released with the scope")
+  }
+
+  test("concurrent cached calls on one lineage register it exactly once") {
+    spark.catalog.clearCache()
+    val n = 8
+    val barrier = new java.util.concurrent.CyclicBarrier(n)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    try {
+      // each thread builds its own lineage-equal frame, as build workers do
+      val fs = (1 to n).map(_ => pool.submit(new java.util.concurrent.Callable[Seq[DataFrame]] {
+        def call(): Seq[DataFrame] = {
+          val sink = new scala.collection.mutable.ListBuffer[DataFrame]
+          CacheTracker.isolated(sink) {
+            val df = spark.range(1000).toDF("x").filter(col("x") % 7 === 3)
+            barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+            CacheTracker.cached(df)
+          }
+          sink.toList
+        }
+      }))
+      val registered = fs.flatMap(_.get())
+      assert(registered.size == 1, s"registered ${registered.size} times")
+      registered.foreach(_.unpersist())
+    } finally pool.shutdown()
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }

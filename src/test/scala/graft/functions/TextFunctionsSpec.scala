@@ -268,4 +268,17 @@ class TextFunctionsSpec extends SparkSpec {
         VectorFunctions.signBucketDeclarative($"a", 8)).collect()(0)
     assert(nr.isNullAt(0) && nr.isNullAt(1) && nr.isNullAt(2) && nr.isNullAt(3))
   }
+
+  test("signBucket rejects bit widths outside 1..63 at construction") {
+    for (bits <- Seq(0, 64))
+      intercept[IllegalArgumentException](VectorFunctions.signBucket(lit(Array(1.0)), bits))
+    // the edges of the valid range still match the declarative form
+    val r = spark.range(1).select(
+      VectorFunctions.signBucket(lit(Array(1.0, -1.0)), 1),
+      VectorFunctions.signBucketDeclarative(lit(Array(1.0, -1.0)), 1),
+      VectorFunctions.signBucket(lit(Array.fill(63)(1.0)), 63),
+      VectorFunctions.signBucketDeclarative(lit(Array.fill(63)(1.0)), 63)).collect()(0)
+    assert(r.getLong(0) == 1L && r.getLong(0) == r.getLong(1))
+    assert(r.getLong(2) == Long.MaxValue && r.getLong(2) == r.getLong(3))
+  }
 }
