@@ -55,7 +55,7 @@ object PlanDump {
     val suite = Flagship.suite(spark)
     def first[C <: Check](pf: PartialFunction[Check, C]): C = suite.checks.collectFirst(pf).get
     lazy val bi = first { case c: ByteIdentityCheck => c }
-    lazy val p1 = KeyScan.phase1(pages, Seq(bi.keyCol), bi.column)
+    lazy val p1 = KeyScan.phase1(pages, Seq(bi.keyCol))
     lazy val nearDup = Dedup.nearDupSurfaces(pages, "url", "text")
     Seq(
       // categorical + digit + drift counts in ONE pass

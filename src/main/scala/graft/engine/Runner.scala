@@ -112,7 +112,7 @@ object Runner {
         case u: UniquenessCheck =>
           byteChecks.collectFirst {
             case b if b.scope.isEmpty && (u.scope ++ u.keys).distinct == Seq(b.keyCol) =>
-              val p1 = KeyScan.phase1(input, Seq(b.keyCol), b.column)
+              val p1 = KeyScan.phase1(input, Seq(b.keyCol))
               (u.id, (u, b, KeyScan.phase2(input, Seq(b.keyCol), b.column, p1)))
           }
       }.flatten.toMap
@@ -153,8 +153,8 @@ object Runner {
 
     // one (verdicts, violations) builder per check family. Several of the
     // branches do EAGER driver-side work at construction time (the OLS
-    // Gram collects, the UN-panel Σ̂ collect, the dedup candidate counts,
-    // the variance-component estimates) — at bench scale the full suite
+    // Gram collects, the dedup candidate counts, the variance-component
+    // estimates) — at bench scale the full suite
     // spent 19 s building sequentially vs 16 s executing the unified
     // action. The builds are independent across checks, so they
     // run on a small thread pool (guide §2.6: actions are only sequential
@@ -203,9 +203,9 @@ object Runner {
         val f = CacheTracker.cached(
           LongitudinalOutlier.flagged(input, c).select(cols.map(col): _*))
         (LongitudinalOutlier.verdictsFrom(f, c), LongitudinalOutlier.violationsFrom(f, c))
-      // type=UN panel outliers: the (eager, Σ̂-collecting) scored frame is
-      // built ONCE and cached — one row per (scope, subject) — so verdicts
-      // and violations share the lineage instead of re-running the panel
+      // type=UN panel outliers: the scored frame is built ONCE and cached —
+      // one row per (scope, subject) — so verdicts and violations share
+      // the lineage instead of re-running the panel
       case c: UnPanelCheck =>
         val (dfp, cfg) = UnPanelOutlier.prepared(input, c)
         val sc = CacheTracker.cached(UnPanelOutlier.scored(dfp, cfg))

@@ -15,7 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Custom Catalyst Expression (SURVEY.md §2.11 preference: native
   * expression over Scala UDF): per token take the first 8 bytes of
   * md5(token) as a 64-bit hash, accumulate ±1 per bit position weighted by
-  * token multiplicity, emit the sign vector as a long. Hamming distance
+  * token multiplicity (counted as ones: Σ±1 = 2·ones − tokens), emit the
+  * sign vector as a long (a tie leaves the bit clear). Hamming distance
   * between SimHashes of two documents approximates their cosine distance
   * over token frequency vectors.
   *
@@ -41,7 +42,8 @@ case class SimHash64(child: Expression)
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
-    val counts = new Array[Int](64)
+    val ones = new Array[Int](64)
+    var nTok = 0
     val md = SimHash64.localMd5.get()
     var i = 0
     val n = arr.numElements()
@@ -53,18 +55,12 @@ case class SimHash64(child: Expression)
         var h = 0L
         var b = 0
         while (b < 8) { h = (h << 8) | (dig(b) & 0xffL); b += 1 }
-        var bit = 0
-        while (bit < 64) {
-          if (((h >>> bit) & 1L) == 1L) counts(bit) += 1 else counts(bit) -= 1
-          bit += 1
-        }
+        SimHash64.tally(ones, h)
+        nTok += 1
       }
       i += 1
     }
-    var out = 0L
-    var bit = 0
-    while (bit < 64) { if (counts(bit) > 0) out |= (1L << bit); bit += 1 }
-    java.lang.Long.valueOf(out)
+    java.lang.Long.valueOf(SimHash64.signs(ones, nTok))
   }
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
@@ -103,7 +99,8 @@ case class SimHashText(child: Expression)
 
   override def nullSafeEval(input: Any): Any = {
     val bytes = input.asInstanceOf[UTF8String].getBytes
-    val counts = new Array[Int](64)
+    val ones = new Array[Int](64)
+    var nTok = 0
     val md = SimHash64.localMd5.get()
     var i = 0
     val n = bytes.length
@@ -119,17 +116,11 @@ case class SimHashText(child: Expression)
         var h = 0L
         var b = 0
         while (b < 8) { h = (h << 8) | (dig(b) & 0xffL); b += 1 }
-        var bit = 0
-        while (bit < 64) {
-          if (((h >>> bit) & 1L) == 1L) counts(bit) += 1 else counts(bit) -= 1
-          bit += 1
-        }
+        SimHash64.tally(ones, h)
+        nTok += 1
       }
     }
-    var out = 0L
-    var bit = 0
-    while (bit < 64) { if (counts(bit) > 0) out |= (1L << bit); bit += 1 }
-    java.lang.Long.valueOf(out)
+    java.lang.Long.valueOf(SimHash64.signs(ones, nTok))
   }
 
   override protected def withNewChildInternal(newChild: Expression): SimHashText =
@@ -137,6 +128,22 @@ case class SimHashText(child: Expression)
 }
 
 object SimHash64 {
+  /** Add the set bits of one token hash to the per-bit counts of ones —
+    * branch-free, so the loop does not mispredict on random hash bits. */
+  private[functions] def tally(ones: Array[Int], h: Long): Unit = {
+    var bit = 0
+    while (bit < 64) { ones(bit) += ((h >>> bit) & 1L).toInt; bit += 1 }
+  }
+
+  /** The sign vector of the ±1 tally: bit b is set iff more than half of
+    * the `nTok` tokens set it (Σ±1 = 2·ones − nTok > 0); a tie stays clear. */
+  private[functions] def signs(ones: Array[Int], nTok: Int): Long = {
+    var out = 0L
+    var bit = 0
+    while (bit < 64) { out |= (if (2 * ones(bit) > nTok) 1L else 0L) << bit; bit += 1 }
+    out
+  }
+
   /** Per-thread MD5 instance — `MessageDigest.getInstance` does a provider
     * lookup per call and digests are not thread-safe to share. */
   private[functions] val localMd5: ThreadLocal[MessageDigest] =

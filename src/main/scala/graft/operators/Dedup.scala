@@ -311,9 +311,7 @@ object Dedup {
   def nearDupVerdictsFrom(sig: DataFrame, drops: DataFrame, capStats: DataFrame,
       check: NearDupCheck): DataFrame = {
     val total = sig.agg(count(lit(1)).cast("double").as("n_total"))
-    val d = drops.agg(
-      count(lit(1)).cast("double").as("n_drop"),
-      sum(when(col("reason") === "exact", 1L).otherwise(0L)).as("n_exact"))
+    val d = drops.agg(count(lit(1)).cast("double").as("n_drop"))
     val framed = total.crossJoin(broadcast(d)).select(
       lit("").as("partition"),
       lit("dup_fraction").as("metric"),

@@ -6,18 +6,16 @@ import org.apache.spark.sql.functions._
 
 /** Fused phase-1 key scan shared by Uniqueness and ByteIdentity.
   *
-  * Both checks' first phase is a full-table `groupBy(xxhash64(key))` —
-  * uniqueness needs per-bucket counts, byte-identity needs min/max payload
-  * digests. Run separately that is two full scans + two shuffles of the
-  * same 8-byte key hashes; fused it is ONE pass emitting both:
+  * Both checks' first phase is a full-table `groupBy(xxhash64(key))`. Run
+  * separately that is two full scans + two shuffles of the same 8-byte key
+  * hashes; fused it is ONE pass over the key alone:
   *
-  *   groupBy(xxhash64(key)).agg(count, min(digest64), max(digest64))
+  *   groupBy(xxhash64(key)).agg(count).filter(count > 1)
   *
-  * A bucket with n == 1 necessarily has min == max digest, so the single
-  * `count > 1` filter retains every candidate either check needs; the
-  * byte-identity candidates are the subset with diverging digests. Each
-  * check's phase 2 stays exact (full-key groupBy / full sha2-256), so the
-  * fusion changes cost, not semantics.
+  * A key whose payloads diverge has >1 row, so the `count > 1` buckets
+  * hold every candidate either check needs. Each check's phase 2 stays
+  * exact (full-key groupBy / full sha2-256), so the fusion changes cost,
+  * not semantics.
   */
 object KeyScan {
 
@@ -26,19 +24,17 @@ object KeyScan {
     * Shared with Dedup's exact-duplicate phase. */
   private[operators] val BroadcastCandidatesMax = 8000000L
 
-  /** One-pass candidate frame: (__kh, __n, __a, __b) for buckets with >1
-    * row. Cached — verdicts + violations of both checks reuse it. */
-  def phase1(df: DataFrame, keyCols: Seq[String], payloadCol: String): DataFrame =
+  /** One-pass candidate frame: (__kh, __n) for key-hash buckets with >1
+    * row; reads only the key columns. Cached — verdicts + violations of
+    * both checks reuse it. */
+  def phase1(df: DataFrame, keyCols: Seq[String]): DataFrame =
     df.groupBy(xxhash64(keyCols.map(col): _*).as("__kh"))
-      .agg(count(lit(1)).as("__n"),
-        min(ByteIdentity.digest64(col(payloadCol))).as("__a"),
-        max(ByteIdentity.digest64(col(payloadCol))).as("__b"))
+      .agg(count(lit(1)).as("__n"))
       .filter(col("__n") > 1)
       .trackedCache()
 
-  /** Fused phase 2: because a divergent-digest bucket necessarily has >1
-    * row, the byte-identity candidates (buckets whose digests diverge) are
-    * a subset of the uniqueness candidates — so ONE semi-join on the
+  /** Fused phase 2: because a key whose payloads diverge necessarily has
+    * >1 row, its bucket is a phase-1 candidate — so ONE semi-join on the
     * phase-1 candidates and ONE exact groupBy(key) serves both checks'
     * second phase (run separately that is two full input scans + two
     * shuffles):

@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.checks.Results
-import graft.stats.UnCov
+import graft.engine.CacheTracker.TrackedCacheOps
+import graft.stats.{PanelFitAgg, UnCov}
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Unstructured-covariance (`type=UN`) panel outlier check — the PROC
@@ -19,15 +20,26 @@ import org.apache.spark.sql.functions._
   * residual cross-product matrix; each subject's d² = rᵀ Σ̂⁻¹ r is flagged
   * against the χ²_T quantile at `cutoffPct`.
   *
-  * Spark shape: cell means + slot means are two groupBy passes; the T×T
-  * cross-products are one bounded self-join + groupBy (UnCov); scoring is
-  * one collect_list per subject (bounded by T ≤ MaxSlots) against a
-  * BROADCAST (key → Σ̂⁻¹) map — no per-row driver work, nothing
-  * subject-proportional collected except the T²-per-scope entries.
+  * Spark shape: ONE lazy plan, no Spark job at build time, O(T²) state
+  * per scope key (T ≤ `UnCov.MaxSlots`):
+  *   1. cell means — one groupBy (key, subject, slot), the only pass over
+  *      the input;
+  *   2. subject vectors — one groupBy (key, subject) collecting each
+  *      subject's slot-ordered (slot, y) vector;
+  *   3. per-key fit — one groupBy (key) running `PanelFitAgg` (the slot
+  *      domain, count, mean vector and co-moment matrix of the complete
+  *      subjects, merged map-side), whose result is T, μ, Σ̂⁻¹ and the
+  *      χ²_T cutoff;
+  *   4. scoring — the fit row is BROADCAST back onto the subject vectors,
+  *      which keep the complete subjects, and d² = (y − μ)ᵀ Σ̂⁻¹ (y − μ) is
+  *      one UDF call per subject.
+  * The subject vectors are cached (lazily) and read by steps 3 and 4, so
+  * the input is scanned once. Nothing subject-proportional reaches the
+  * driver or sits in one task; no sort-merge join and no window.
   * Scopes whose Σ̂ is singular (k ≤ T or degenerate residuals) are
   * reported as not-evaluable (`pass = null` verdict); scopes whose slot
-  * count exceeds `UnCov.MaxSlots` are EXCLUDED from evaluation (T² pair
-  * blow-up guard) — both policies explicit, nothing fabricated.
+  * count exceeds `UnCov.MaxSlots` are EXCLUDED from evaluation — both
+  * policies explicit, nothing fabricated.
   */
 object UnPanelOutlier {
 
@@ -65,104 +77,57 @@ object UnPanelOutlier {
       .withColumn("__key", keyCol)
   }
 
-  /** Complete-case panel with dense slot index and residuals from slot
-    * means: one row per (key, subj, slot) with `__si`, `__r`, `__T`. */
-  private[operators] def residualPanel(df: DataFrame, cfg: Config): DataFrame = {
+  /** One row per (key, subject): d², the χ² cutoff, and the outlier flag.
+    * `d2`, `cutoff`, `t_slots` and `k_subjects` are null where the scope
+    * was not evaluable (singular Σ̂). */
+  def scored(df: DataFrame, cfg: Config): DataFrame = {
     // group by the NATIVE subject id; the public string form is rendered
-    // on the reduced one-row-per-(subj, slot) frame, not per input row
-    // cache the reduced cell frame (one row per (key, subj, slot) — tiny
-    // at any input scale): it feeds FOUR plan branches (the slot domain,
-    // the complete-subject filter, the slot means and the final join), and
-    // uncached each branch re-ran the full-input groupBy (measured ~4 ×
-    // 1.5 s of the un-panel family's 6.4 s bench leg at 2 M pages).
-    import graft.engine.CacheTracker.TrackedCacheOps
+    // per complete subject, not per input row
     val cell = keyed(df, cfg)
       .groupBy(col("__key"), col(cfg.idCol).as("__subjN"),
         col(cfg.slotCol).as("__slot"))
       .agg(avg(col(cfg.outcome).cast("double")).as("__y"))
-      .withColumn("__subj", col("__subjN").cast("string")).drop("__subjN")
+    // cached (one row per subject, lazily — no job here): both sides of
+    // the broadcast join below read the subject vectors, and over a cached
+    // input (the Runner's) Spark re-instances that input on one join side,
+    // so the two sides' exchanges no longer match for reuse and the input
+    // was scanned twice
+    val subj = cell.groupBy("__key", "__subjN")
+      .agg(sort_array(collect_list(struct(col("__slot"), col("__y")))).as("__v"))
       .trackedCache()
-    // slot domain per key with a dense 0-based index, in ONE reduced agg:
-    // distinct (key, slot) → per-key sorted slot array → posexplode. This
-    // replaced a distinct + T² inequality self-join + two groupBys (round-5
-    // stage-latency trim: the un-panel family's cost at bench scale was
-    // mostly fixed stage latency, BENCH/BASELINE.md) and it also degrades
-    // linearly on a hostile high-cardinality slot column — the self-join
-    // form went quadratic in T BEFORE the MaxSlots filter could drop the
-    // key, while collect_set holds ≤ T values per key and the filter runs
-    // on the array size. Slot count past MaxSlots → key excluded (same
-    // explicit policy as before).
-    val slotIdx = cell.select("__key", "__slot").distinct()
-      .groupBy("__key")
-      .agg(sort_array(collect_set(col("__slot"))).as("__slots"))
-      .filter(size(col("__slots")) <= UnCov.MaxSlots)
-      .select(col("__key"), size(col("__slots")).cast("int").as("__T"),
-        posexplode(col("__slots")))
-      .select(col("__key"), col("col").as("__slot"),
-        col("pos").cast("int").as("__si"), col("__T"))
-    val cellIdx = cell.join(broadcast(slotIdx), Seq("__key", "__slot"))
-    // complete-case subjects: observed in every slot of their scope
-    val completeSubj = cellIdx.groupBy("__key", "__subj")
-      .agg(count(lit(1)).as("__ns"), first("__T").as("__t"))
-      .filter(col("__ns") === col("__t"))
-      .select("__key", "__subj")
-    val pan = cellIdx.join(completeSubj, Seq("__key", "__subj"), "left_semi")
-    // slot means over the retained (complete) subjects → residuals
-    val mu = pan.groupBy("__key", "__si")
-      .agg(avg("__y").as("__mu"))
-    pan.join(broadcast(mu), Seq("__key", "__si"))
-      .withColumn("__r", col("__y") - col("__mu"))
+    // per key: slot domain T (keys past MaxSlots come back null and drop),
+    // and μ, Σ̂⁻¹, cutoff over the subjects observed in all T slots
+    val fits = subj.groupBy("__key")
+      .agg(PanelFitAgg.fit(col("__v"), cfg.cutoffPct).as("__f"))
+      .filter(col("__f").isNotNull)
+      .select(col("__key"), col("__f.t").as("__T"), col("__f.mu").as("__mu"),
+        col("__f.inv").as("__inv"), col("__f.cutoff").as("cutoff"),
+        when(col("__f.inv").isNotNull, col("__f.t")).as("t_slots"),
+        col("__f.k").as("k_subjects"))
+    // complete-case subjects: a subject's slots are a subset of its key's
+    // domain, so holding T of them is holding all of them — and its
+    // slot-sorted values are then in the domain's order
+    subj.join(broadcast(fits), Seq("__key"))
+      .filter(size(col("__v")) === col("__T"))
+      .select(col("__key"), col("__subjN").cast("string").as("__subj"),
+        d2Udf(col("__v.__y"), col("__mu"), col("__inv")).as("d2"),
+        col("cutoff"), col("t_slots"), col("k_subjects"))
+      .withColumn("flag_outlier", coalesce(col("d2") > col("cutoff"), lit(false)))
   }
 
-  /** One row per (key, subject): d², the χ² cutoff, and the outlier flag.
-    * `d2` is null where the scope was not evaluable (singular Σ̂). */
-  def scored(df: DataFrame, cfg: Config): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    import graft.engine.CacheTracker.TrackedCacheOps
-    // the panel lineage (filter → 2 groupBys → 4 joins over the full
-    // input) is executed by BOTH the Σ̂ collect below and the scoring
-    // groupBy — cached so the row-proportional frame is read once, not
-    // twice (narrow: one row per (key, subj, slot), slots ≤ MaxSlots)
-    val panel = residualPanel(df, cfg).trackedCache()
-    // T² entries per scope — the ONLY driver-side collect, key-proportional
-    val entries = UnCov.pooledCrossProducts(panel, "__key", "__subj", "__si", "__r")
-      .collect()
-      .groupBy(_.getString(0))
-    val perKey: Map[String, (Array[Array[Double]], Int, Long)] =
-      entries.flatMap { case (k, rows) =>
-        val t = rows.map(_.getInt(2)).max + 1
-        val kSubj = rows.map(_.getLong(4)).max
-        val cov = UnCov.covMatrix(
-          rows.map(r => (r.getInt(1), r.getInt(2), r.getDouble(3))).toSeq, t, kSubj)
-        Option(UnCov.invert(cov)).map(inv => k -> (inv, t, kSubj))
-      }
-    val cutoffs = perKey.toSeq.map { case (k, (_, t, kSubj)) =>
-      (k, UnCov.chi2Inv(cfg.cutoffPct, t), t, kSubj)
-    }.toDF("__key", "cutoff", "t_slots", "k_subjects")
-    val bc = spark.sparkContext.broadcast(perKey.map { case (k, (inv, t, _)) => k -> ((inv, t)) })
-    val d2Udf = udf { (key: String, v: Seq[Row]) =>
-      bc.value.get(key).map { case (inv, t) =>
-        val r = new Array[Double](t)
-        v.foreach(row => r(row.getInt(0)) = row.getDouble(1))
-        UnCov.mahalanobis(r, inv)
-      }
+  /** d² of one subject against its key's fit; null when the key has none. */
+  private val d2Udf = udf { (y: Seq[Double], mu: Seq[Double], inv: Seq[Seq[Double]]) =>
+    Option(inv).map { m =>
+      UnCov.mahalanobis(Array.tabulate(y.length)(i => y(i) - mu(i)), m.map(_.toArray).toArray)
     }
-    panel.groupBy("__key", "__subj")
-      .agg(collect_list(struct(col("__si"), col("__r"))).as("__v"))
-      .withColumn("d2", d2Udf(col("__key"), col("__v")))
-      .join(broadcast(cutoffs), Seq("__key"), "left")
-      .withColumn("flag_outlier",
-        coalesce(col("d2") > col("cutoff"), lit(false)))
-      .drop("__v")
   }
 
   def verdicts(df: DataFrame, cfg: Config): DataFrame =
     verdictsFrom(scored(df, cfg), cfg)
 
   /** Verdicts from a prebuilt `scored` frame — lets the Runner (and any
-    * caller that needs both outputs) build the eager, Σ̂-collecting scored
-    * lineage ONCE, matching the sibling operators' `verdictsFrom` shape. */
+    * caller that needs both outputs) build and cache the scored lineage
+    * ONCE, matching the sibling operators' `verdictsFrom` shape. */
   def verdictsFrom(sc: DataFrame, cfg: Config): DataFrame = {
     val framed = sc.groupBy(col("__key")).agg(
       sum(when(col("flag_outlier"), 1L).otherwise(0L)).as("n_outliers"),

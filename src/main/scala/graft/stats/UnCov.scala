@@ -3,9 +3,6 @@ package graft.stats
 import org.apache.commons.math3.distribution.ChiSquaredDistribution
 import org.apache.commons.math3.linear.{Array2DRowRealMatrix, LUDecomposition}
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
 /** Unstructured (`type=UN`) within-subject covariance for slot-structured
   * panels — the PROC MIXED `repeated / type=UN` surface the random-intercept
   * default (VarComp) declares out of scope (longitudinalPlot.sas:423-442
@@ -25,49 +22,75 @@ import org.apache.spark.sql.functions._
   *     quantile (the large-k calibration; the exact (k−1)T/(k−T)·F small-k
   *     form is noted in the scaladoc of `cutoff`).
   *
-  * Spark shape: slot means and residuals are column ops; the T×T pooled
-  * cross-products come from ONE self-join on (key, subject) restricted to
-  * slot1 ≤ slot2 (≤ T(T+1)/2 rows per subject, T capped at `MaxSlots`) and
-  * ONE groupBy (key, slot1, slot2) — nothing subject-proportional reaches
-  * the driver; only T² entries per scope key do.
+  * Spark shape: the slot domain, slot means and Σ̂ of one scope key are
+  * ONE mergeable aggregate over its subject vectors (`PanelFitAgg`): the
+  * buffer is the key's slot domain, a count, a T-vector of means and a
+  * T×T co-moment matrix (`CoMoment`, combined pairwise after Chan et
+  * al.), so per-key state is O(T²) with T capped at `MaxSlots`, partials
+  * merge map-side, and nothing subject-proportional is held on the driver
+  * or in one task.
   */
 object UnCov {
 
-  /** Hard cap on the slot dimension — T² drives the pair-explode factor
-    * and the driver-side matrix; 32 keeps both trivially bounded. */
+  /** Hard cap on the slot dimension — T² sizes the per-key co-moment
+    * buffer and the inverse; 32 keeps both trivially bounded. */
   val MaxSlots = 32
 
-  /** Pooled cross-product entries per scope key from a complete-case panel
-    * frame (one row per (key, subj, slot) with a residual column).
-    *
-    * @return one row per (key, slot1 ≤ slot2): (spp = Σ_subj r₁·r₂,
-    *         k = subject count) — ≤ T(T+1)/2 rows per key.
-    */
-  def pooledCrossProducts(panel: DataFrame, keyCol: String, subjCol: String,
-      slotCol: String, residCol: String): DataFrame = {
-    val a = panel.select(col(keyCol).as("__k"), col(subjCol).as("__s"),
-      col(slotCol).as("s1"), col(residCol).as("r1"))
-    val b = panel.select(col(keyCol).as("__k"), col(subjCol).as("__s"),
-      col(slotCol).as("s2"), col(residCol).as("r2"))
-    a.join(b, Seq("__k", "__s"))
-      .filter(col("s1") <= col("s2"))
-      .groupBy(col("__k").as(keyCol), col("s1"), col("s2"))
-      .agg(sum(col("r1") * col("r2")).as("spp"),
-        count(lit(1)).as("k_subjects"))
+  /** Mergeable per-key moments of complete-case subject vectors: count,
+    * mean vector and co-moment matrix Σᵢ (yᵢ − ȳ)(yᵢ − ȳ)ᵀ (row-major,
+    * T×T). Empty arrays are the zero state. */
+  final case class CoMoment(n: Long, mean: Array[Double], m2: Array[Double])
+
+  /** The zero state. */
+  def emptyMoments: CoMoment = CoMoment(0L, Array.emptyDoubleArray, Array.emptyDoubleArray)
+
+  /** Merge two co-moment states (the pairwise update of Chan, Golub &
+    * LeVeque): with δ = ȳ_b − ȳ_a, ȳ = ȳ_a + δ·n_b/n and
+    * M = M_a + M_b + δδᵀ·n_a·n_b/n. Updates `a` in place. */
+  def merge(a: CoMoment, b: CoMoment): CoMoment =
+    if (b.n == 0) a
+    else if (a.n == 0) CoMoment(b.n, b.mean.clone(), b.m2.clone())
+    else combine(a, b.n, b.mean, b.m2)
+
+  /** Add one subject vector — `merge` with a count-1, zero-co-moment
+    * state, without allocating its T×T zeros. */
+  def add(a: CoMoment, y: Array[Double]): CoMoment =
+    if (a.n == 0) CoMoment(1L, y.clone(), new Array[Double](y.length * y.length))
+    else combine(a, 1L, y, null)
+
+  /** `a` ⊕ (nb, mb, m2b); `m2b == null` is the zero matrix. Vectors of
+    * unequal length (a subject outside this key's slot domain) throw. */
+  private def combine(a: CoMoment, nb: Long, mb: Array[Double],
+      m2b: Array[Double]): CoMoment = {
+    val t = a.mean.length
+    require(mb.length == t, s"co-moment length ${mb.length} != $t")
+    val n = a.n + nb
+    val w = a.n.toDouble * nb / n
+    val f = nb.toDouble / n
+    val d = new Array[Double](t)
+    var i = 0
+    while (i < t) { d(i) = mb(i) - a.mean(i); a.mean(i) += d(i) * f; i += 1 }
+    i = 0
+    while (i < t) {
+      var j = 0
+      while (j < t) {
+        val ij = i * t + j
+        a.m2(ij) += (if (m2b == null) 0.0 else m2b(ij)) + d(i) * d(j) * w
+        j += 1
+      }
+      i += 1
+    }
+    CoMoment(n, a.mean, a.m2)
   }
 
-  /** Driver-side Σ̂ from the collected entries of ONE key: unbiased pooled
-    * covariance (divisor k − 1 — residuals are from slot means estimated
-    * on the same k subjects). Entries index into the dense slot order
-    * 0..T-1 the caller derived. */
-  def covMatrix(entries: Seq[(Int, Int, Double)], nSlots: Int, k: Long): Array[Array[Double]] = {
-    val m = Array.ofDim[Double](nSlots, nSlots)
-    val div = math.max(1L, k - 1L).toDouble
-    entries.foreach { case (i, j, spp) =>
-      m(i)(j) = spp / div
-      m(j)(i) = spp / div
-    }
-    m
+  /** Σ̂⁻¹ from one key's merged moments, where Σ̂ = M / (k − 1) is the
+    * unbiased pooled covariance (residuals are from slot means estimated
+    * on the same k subjects); null when Σ̂ is singular (k ≤ T or
+    * degenerate residuals). */
+  def inverseCov(m: CoMoment): Array[Array[Double]] = {
+    val t = m.mean.length
+    val div = math.max(1L, m.n - 1L).toDouble
+    invert(Array.tabulate(t, t)((i, j) => m.m2(i * t + j) / div))
   }
 
   /** Inverse via LU with partial pivoting (commons-math3); null when the

@@ -187,7 +187,7 @@ class PlanSpec extends SparkSpec {
   test("keyscan phase 2 broadcasts the candidate set; the fat side never shuffles") {
     graft.engine.CacheTracker.scope {
       val pages = graft.sources.Pages.generate(spark, 2000)
-      val p1 = graft.operators.KeyScan.phase1(pages, Seq("url"), "text")
+      val p1 = graft.operators.KeyScan.phase1(pages, Seq("url"))
       val p2 = graft.operators.KeyScan.phase2(pages, Seq("url"), "text", p1)
       val p = plan(p2)
       // static planning put a sort-merge semi-join here, whose full-table
@@ -202,16 +202,55 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("un-panel scoring reads the CACHED residual panel (no double execution)") {
+  test("un-panel scored is one lazy plan: no job at build, no sort-merge join, no window") {
     import spark.implicits._
-    graft.engine.CacheTracker.scope {
-      val rows = (1 to 20).flatMap(s => (1 to 3).map(t => (s"s$s", t, 5.0 * t + s * 0.01)))
-      val df = rows.toDF("subj", "visit", "y")
-      val sc = graft.operators.UnPanelOutlier.scored(df,
-        graft.operators.UnPanelOutlier.Config("unp", "y", "subj", "visit"))
-      val p = plan(sc)
-      assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
-        s"scoring must ride the panel cache, not re-execute its lineage:\n${p.take(1200)}")
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    val sc = spark.sparkContext
+    // a cached input, as the Runner passes it
+    val persisted = sc.getPersistentRDDs.keySet
+    val rows = (1 to 20).flatMap(s => (1 to 3).map(t => (s"s$s", t, 5.0 * t + s * 0.01 + (s * t) % 3)))
+    val df = rows.toDF("subj", "visit", "y").cache()
+    df.count()
+    val inputRdds = sc.getPersistentRDDs.keySet -- persisted
+    // jobs and input-reading stages per tag; listener events arrive in
+    // order, so once the sentinel job's start is seen every earlier event was
+    val started = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    def tagsOf(p: java.util.Properties) = Option(p).flatMap(q => Option(q.getProperty("spark.job.tags")))
+      .map(_.split(",").toSeq).getOrElse(Nil)
+    def bump(k: String) = started.merge(k, 1, (a: Integer, b: Integer) => a + b)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        tagsOf(e.properties).foreach(bump)
+        if (tagsOf(e.properties).contains("unp-sentinel")) sentinel.countDown()
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(r => inputRdds(r.id)))
+          tagsOf(e.properties).foreach(t => bump(s"$t:input"))
+    }
+    def tagged[T](tag: String)(body: => T): T = {
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+    }
+    val cfg = graft.operators.UnPanelOutlier.Config("unp", "y", "subj", "visit")
+    sc.addSparkListener(listener)
+    try graft.engine.CacheTracker.scope {
+      val scored = tagged("unp-build")(graft.operators.UnPanelOutlier.scored(df, cfg))
+      // control: the eager lineage it replaced runs jobs while building
+      tagged("unp-ref")(graft.operators.UnPanelOutlierRef.scored(df, cfg))
+      assert(tagged("unp-exec")(scored.count()) == 20)
+      tagged("unp-sentinel")(sc.parallelize(Seq(1), 1).count())
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
+      assert(Option(started.get("unp-ref")).exists(_ > 0), "control: the listener sees build jobs")
+      assert(!started.containsKey("unp-build"),
+        s"building scored ran ${started.get("unp-build")} Spark job(s)")
+      assert(started.get("unp-exec:input") == 1, s"one pass over the input: $started")
+      val p = plan(scored)
+      assert(!p.contains("SortMergeJoin"), s"no sort-merge join:\n${p.take(1600)}")
+      assert(!p.contains("Window"), s"no window:\n${p.take(1600)}")
+    } finally {
+      sc.removeSparkListener(listener)
+      df.unpersist()
     }
   }
 

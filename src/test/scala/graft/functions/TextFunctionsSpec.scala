@@ -163,6 +163,26 @@ class TextFunctionsSpec extends SparkSpec {
     }
   }
 
+  test("simhash pins: a bit tie stays clear, tokens past one md5 block, null tokens skipped") {
+    // the per-token hash: first 8 md5 bytes, big-endian
+    def h(tok: String): Long = java.security.MessageDigest.getInstance("MD5")
+      .digest(tok.getBytes("UTF-8")).take(8).foldLeft(0L)((acc, b) => (acc << 8) | (b & 0xffL))
+    def fused(t: String) = one[Long](SimHash64.ofText($"t"), t)
+    // longer than 55 bytes: the md5 message spans two blocks
+    val (long1, long2) = ("x" * 56, "y" * 200)
+    // one token: the sign vector is the token's own hash
+    Seq("a", long1, long2).foreach(t => assert(fused(t) == h(t), t))
+    // two tokens: a bit set by exactly one of them ties (Σ±1 = 0), stays clear
+    assert((h("a") ^ h("b")) != 0L && (h(long1) ^ h(long2)) != 0L)
+    assert(fused("a b") == (h("a") & h("b")))
+    assert(fused(s"$long1 $long2") == (h(long1) & h(long2)))
+    // token-array form: a null element is skipped, not counted as a token —
+    // counted, ["a", null] would tie every set bit of h("a") and read 0
+    val arr = Seq(Seq("a", null), Seq("a", null, "b"), Seq[String](null, null)).toDF("toks")
+      .select(SimHash64.ofTokens($"toks")).collect().map(_.getLong(0))
+    assert(arr.toSeq == Seq(h("a"), h("a") & h("b"), 0L))
+  }
+
   test("fingerprint native form ≡ declarative md5 chain (byte-identical), incl. edges") {
     val texts = Seq(
       "Hello  World", "hello world", "", "   ", "  Lead", "Trail  ",

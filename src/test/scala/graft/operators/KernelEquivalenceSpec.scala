@@ -20,21 +20,8 @@ class KernelEquivalenceSpec extends SparkSpec {
   private def close(a: Double, b: Double) =
     (a.isNaN && b.isNaN) || a == b || math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(a))
 
-  private def sameRows(got: DataFrame, ref: DataFrame, what: String): Unit = {
-    assert(got.schema.fieldNames.toSeq == ref.schema.fieldNames.toSeq, s"$what columns")
-    def canon(df: DataFrame) = df.collect().toSeq.map(_.toSeq).sortBy(_.map {
-      case d: Double => f"$d%.6e"
-      case x => String.valueOf(x)
-    }.mkString("\u0001"))
-    val (g, r) = (canon(got), canon(ref))
-    assert(g.size == r.size, s"$what: ${g.size} rows vs reference ${r.size}")
-    g.zip(r).foreach { case (gr, rr) =>
-      gr.zip(rr).zip(got.schema.fieldNames).foreach {
-        case ((a: Double, b: Double), f) => assert(close(a, b), s"$what.$f: $a vs $b\n$gr\n$rr")
-        case ((a, b), f) => assert(a == b, s"$what.$f: $a vs $b\n$gr\n$rr")
-      }
-    }
-  }
+  private def sameRows(got: DataFrame, ref: DataFrame, what: String): Unit =
+    RowEquivalence.sameRows(got, ref, what)(close)
 
   // U+FF21 sorts AFTER U+1F600 in UTF-8 bytes but BEFORE it as UTF-16
   private val values = Seq("a", "b", "é", "Ａ", "😀")

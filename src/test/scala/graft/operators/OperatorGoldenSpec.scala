@@ -550,7 +550,7 @@ class OperatorGoldenSpec extends SparkSpec {
     ).toDF("url", "text")
     val u = UniquenessCheck("u", Seq("url"))
     val b = ByteIdentityCheck("b", "url", "text")
-    val p1 = KeyScan.phase1(df, Seq("url"), "text")
+    val p1 = KeyScan.phase1(df, Seq("url"))
     val p2 = KeyScan.phase2(df, Seq("url"), "text", p1)
     // frame contents: exact per-key counts + distinct full digests
     val rows = p2.collect().map(r => r.getAs[String]("url") ->
@@ -590,7 +590,7 @@ class OperatorGoldenSpec extends SparkSpec {
     }
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val p1 = KeyScan.phase1(df, Seq("url"), "text")
+      val p1 = KeyScan.phase1(df, Seq("url"))
       val (bc, bcBroadcast) = run(KeyScan.phase2(df, Seq("url"), "text", p1))
       val (sh, shBroadcast) = run(KeyScan.phase2(df, Seq("url"), "text", p1, bcMax = -1L))
       assert(bcBroadcast && !shBroadcast)

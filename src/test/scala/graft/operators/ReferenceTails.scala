@@ -2,8 +2,8 @@ package graft.operators
 
 import graft.engine.CacheTracker.TrackedCacheOps
 import graft.checks._
-import graft.stats.{Distributions, Holm, KllSketchAgg}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.stats.{Distributions, Holm, KllSketchAgg, UnCov}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
 // Scala kernels, kept verbatim (objects renamed) as the equivalence
 // reference for KernelEquivalenceSpec. Window totals, domain distincts,
 // zero-fill shell joins and Holm collect_list round trips — one exchange
-// per step. Not used by the engine.
+// per step. The last object is the UN-panel scoring lineage before its
+// per-key co-moment kernel, the reference for UnPanelOutlierSpec. Not
+// used by the engine.
 
 /** CategoricalConsistency before its per-panel kernel. */
 object CategoricalConsistencyRef {
@@ -802,5 +804,147 @@ object GroupVarianceRef {
       concat(lit("heterogeneous variance, p_holm="),
         round(col("p_holm"), 6).cast("string")).as("label"))
     Results.toViolations(v, check.id)
+  }
+}
+
+
+/** UnPanelOutlier before its per-key co-moment kernel: a cached cell
+  * frame, a T² self-join for the pooled cross-products, a driver collect
+  * of the per-key Σ̂ entries and a `sparkContext.broadcast` of the
+  * inverses — about 30 Spark jobs at build time. */
+object UnPanelOutlierRef {
+
+  /** Pooled cross-product entries per scope key from a complete-case panel
+    * frame (one row per (key, subj, slot) with a residual column).
+    *
+    * @return one row per (key, slot1 ≤ slot2): (spp = Σ_subj r₁·r₂,
+    *         k = subject count) — ≤ T(T+1)/2 rows per key.
+    */
+  def pooledCrossProducts(panel: DataFrame, keyCol: String, subjCol: String,
+      slotCol: String, residCol: String): DataFrame = {
+    val a = panel.select(col(keyCol).as("__k"), col(subjCol).as("__s"),
+      col(slotCol).as("s1"), col(residCol).as("r1"))
+    val b = panel.select(col(keyCol).as("__k"), col(subjCol).as("__s"),
+      col(slotCol).as("s2"), col(residCol).as("r2"))
+    a.join(b, Seq("__k", "__s"))
+      .filter(col("s1") <= col("s2"))
+      .groupBy(col("__k").as(keyCol), col("s1"), col("s2"))
+      .agg(sum(col("r1") * col("r2")).as("spp"),
+        count(lit(1)).as("k_subjects"))
+  }
+
+  /** Driver-side Σ̂ from the collected entries of ONE key: unbiased pooled
+    * covariance (divisor k − 1 — residuals are from slot means estimated
+    * on the same k subjects). Entries index into the dense slot order
+    * 0..T-1 the caller derived. */
+  def covMatrix(entries: Seq[(Int, Int, Double)], nSlots: Int, k: Long): Array[Array[Double]] = {
+    val m = Array.ofDim[Double](nSlots, nSlots)
+    val div = math.max(1L, k - 1L).toDouble
+    entries.foreach { case (i, j, spp) =>
+      m(i)(j) = spp / div
+      m(j)(i) = spp / div
+    }
+    m
+  }
+
+  private def keyed(df: DataFrame, cfg: UnPanelOutlier.Config): DataFrame = {
+    val keyCol =
+      if (cfg.scope.isEmpty) lit("")
+      else concat_ws("/", cfg.scope.map(c => coalesce(col(c).cast("string"), lit("∅"))): _*)
+    df.filter(col(cfg.outcome).isNotNull && col(cfg.slotCol).isNotNull &&
+        col(cfg.idCol).isNotNull)
+      .withColumn("__key", keyCol)
+  }
+
+  /** Complete-case panel with dense slot index and residuals from slot
+    * means: one row per (key, subj, slot) with `__si`, `__r`, `__T`. */
+  def residualPanel(df: DataFrame, cfg: UnPanelOutlier.Config): DataFrame = {
+    // group by the NATIVE subject id; the public string form is rendered
+    // on the reduced one-row-per-(subj, slot) frame, not per input row
+    // cache the reduced cell frame (one row per (key, subj, slot) — tiny
+    // at any input scale): it feeds FOUR plan branches (the slot domain,
+    // the complete-subject filter, the slot means and the final join), and
+    // uncached each branch re-ran the full-input groupBy (measured ~4 ×
+    // 1.5 s of the un-panel family's 6.4 s bench leg at 2 M pages).
+    import graft.engine.CacheTracker.TrackedCacheOps
+    val cell = keyed(df, cfg)
+      .groupBy(col("__key"), col(cfg.idCol).as("__subjN"),
+        col(cfg.slotCol).as("__slot"))
+      .agg(avg(col(cfg.outcome).cast("double")).as("__y"))
+      .withColumn("__subj", col("__subjN").cast("string")).drop("__subjN")
+      .trackedCache()
+    // slot domain per key with a dense 0-based index, in ONE reduced agg:
+    // distinct (key, slot) → per-key sorted slot array → posexplode. This
+    // replaced a distinct + T² inequality self-join + two groupBys (round-5
+    // stage-latency trim: the un-panel family's cost at bench scale was
+    // mostly fixed stage latency, BENCH/BASELINE.md) and it also degrades
+    // linearly on a hostile high-cardinality slot column — the self-join
+    // form went quadratic in T BEFORE the MaxSlots filter could drop the
+    // key, while collect_set holds ≤ T values per key and the filter runs
+    // on the array size. Slot count past MaxSlots → key excluded (same
+    // explicit policy as before).
+    val slotIdx = cell.select("__key", "__slot").distinct()
+      .groupBy("__key")
+      .agg(sort_array(collect_set(col("__slot"))).as("__slots"))
+      .filter(size(col("__slots")) <= UnCov.MaxSlots)
+      .select(col("__key"), size(col("__slots")).cast("int").as("__T"),
+        posexplode(col("__slots")))
+      .select(col("__key"), col("col").as("__slot"),
+        col("pos").cast("int").as("__si"), col("__T"))
+    val cellIdx = cell.join(broadcast(slotIdx), Seq("__key", "__slot"))
+    // complete-case subjects: observed in every slot of their scope
+    val completeSubj = cellIdx.groupBy("__key", "__subj")
+      .agg(count(lit(1)).as("__ns"), first("__T").as("__t"))
+      .filter(col("__ns") === col("__t"))
+      .select("__key", "__subj")
+    val pan = cellIdx.join(completeSubj, Seq("__key", "__subj"), "left_semi")
+    // slot means over the retained (complete) subjects → residuals
+    val mu = pan.groupBy("__key", "__si")
+      .agg(avg("__y").as("__mu"))
+    pan.join(broadcast(mu), Seq("__key", "__si"))
+      .withColumn("__r", col("__y") - col("__mu"))
+  }
+
+  /** One row per (key, subject): d², the χ² cutoff, and the outlier flag.
+    * `d2` is null where the scope was not evaluable (singular Σ̂). */
+  def scored(df: DataFrame, cfg: UnPanelOutlier.Config): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    import graft.engine.CacheTracker.TrackedCacheOps
+    // the panel lineage (filter → 2 groupBys → 4 joins over the full
+    // input) is executed by BOTH the Σ̂ collect below and the scoring
+    // groupBy — cached so the row-proportional frame is read once, not
+    // twice (narrow: one row per (key, subj, slot), slots ≤ MaxSlots)
+    val panel = residualPanel(df, cfg).trackedCache()
+    // T² entries per scope — the ONLY driver-side collect, key-proportional
+    val entries = pooledCrossProducts(panel, "__key", "__subj", "__si", "__r")
+      .collect()
+      .groupBy(_.getString(0))
+    val perKey: Map[String, (Array[Array[Double]], Int, Long)] =
+      entries.flatMap { case (k, rows) =>
+        val t = rows.map(_.getInt(2)).max + 1
+        val kSubj = rows.map(_.getLong(4)).max
+        val cov = covMatrix(
+          rows.map(r => (r.getInt(1), r.getInt(2), r.getDouble(3))).toSeq, t, kSubj)
+        Option(UnCov.invert(cov)).map(inv => k -> (inv, t, kSubj))
+      }
+    val cutoffs = perKey.toSeq.map { case (k, (_, t, kSubj)) =>
+      (k, UnCov.chi2Inv(cfg.cutoffPct, t), t, kSubj)
+    }.toDF("__key", "cutoff", "t_slots", "k_subjects")
+    val bc = spark.sparkContext.broadcast(perKey.map { case (k, (inv, t, _)) => k -> ((inv, t)) })
+    val d2Udf = udf { (key: String, v: Seq[Row]) =>
+      bc.value.get(key).map { case (inv, t) =>
+        val r = new Array[Double](t)
+        v.foreach(row => r(row.getInt(0)) = row.getDouble(1))
+        UnCov.mahalanobis(r, inv)
+      }
+    }
+    panel.groupBy("__key", "__subj")
+      .agg(collect_list(struct(col("__si"), col("__r"))).as("__v"))
+      .withColumn("d2", d2Udf(col("__key"), col("__v")))
+      .join(broadcast(cutoffs), Seq("__key"), "left")
+      .withColumn("flag_outlier",
+        coalesce(col("d2") > col("cutoff"), lit(false)))
+      .drop("__v")
   }
 }

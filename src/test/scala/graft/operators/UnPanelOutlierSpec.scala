@@ -1,12 +1,17 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.engine.CacheTracker
 import graft.stats.UnCov
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.util.Random
 
 /** Golden tests for the type=UN panel outlier operator: hand-computed
   * pooled covariance / Mahalanobis distances on small panels, plus the
-  * complete-case, singularity, and planted-outlier policies. */
+  * complete-case, singularity, and planted-outlier policies; and the
+  * per-key co-moment kernel ≡ the eager lineage it replaced
+  * (UnPanelOutlierRef). */
 class UnPanelOutlierSpec extends SparkSpec {
   import spark.implicits._
 
@@ -121,5 +126,121 @@ class UnPanelOutlierSpec extends SparkSpec {
     val gotA = scored.filter(col("__key") === "a").select("__subj", "d2")
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     ya.indices.foreach(s => assert(math.abs(gotA(s.toString) - wantA(s)) < 1e-9))
+  }
+
+  // ---- lazy co-moment kernel ≡ the eager Σ̂-collecting reference ----
+
+  /** (grp, subj, slot, y): scopes "a" (with a planted outlier), "b" (same
+    * subject ids as "a") and null, each with repeated cells and incomplete
+    * subjects; "sing" (k = 3 ≤ T = 4), "one" (T = 1) and "wide" (T = 33). */
+  private def panelRows(seed: Int): Seq[(String, Long, Int, Double)] = {
+    val rnd = new Random(seed)
+    def scope(grp: String, nSubj: Int, nSlots: Int, base: Long) = for {
+      s <- 0 until nSubj; t <- 0 until nSlots
+      if !(s % 7 == 3 && t == nSlots - 1) // incomplete: misses the last slot
+      _ <- 0 until (if (rnd.nextDouble() < 0.15) 2 else 1) // repeated cell
+    } yield (grp, base + s, 10 * t + 1,
+      5.0 * t + (s % 4) + rnd.nextGaussian() * (1 + t % 3) +
+        (if (grp == "a" && s == 5 && t == 1) 100.0 else 0.0))
+    scope("a", 25, 4, 1000L) ++ scope("b", 30, 3, 1000L) ++ scope(null, 20, 5, 5000L) ++
+      scope("sing", 3, 4, 7000L) ++ scope("one", 12, 1, 8000L) ++ scope("wide", 40, 33, 9000L)
+  }
+
+  private def close(a: Double, b: Double) =
+    a == b || math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b))
+
+  /** Same columns, same rows: doubles within 1e-9 relative, the rest equal. */
+  private def sameRows(got: DataFrame, ref: DataFrame, what: String): Unit =
+    RowEquivalence.sameRows(got, ref, what)(close)
+
+  for (ids <- Seq("long", "string"))
+    test(s"co-moment kernel ≡ reference lineage: scored, verdicts, violations ($ids subject ids)") {
+      for (seed <- 1 to 2) CacheTracker.scope {
+        val rows = panelRows(seed)
+        val df =
+          if (ids == "long") rows.toDF("grp", "subj", "slot", "y")
+          else rows.map { case (g, s, t, y) => (g, s"u$s", t, y) }.toDF("grp", "subj", "slot", "y")
+        val c = cfg.copy(scope = Seq("grp"))
+        val got = UnPanelOutlier.scored(df, c)
+        val ref = UnPanelOutlierRef.scored(df, c)
+        assert(got.schema.map(f => f.name -> f.dataType) == ref.schema.map(f => f.name -> f.dataType))
+        sameRows(got, ref, s"seed $seed scored")
+        sameRows(UnPanelOutlier.verdictsFrom(got, c), UnPanelOutlier.verdictsFrom(ref, c),
+          s"seed $seed verdicts")
+        sameRows(UnPanelOutlier.violationsFrom(got, c), UnPanelOutlier.violationsFrom(ref, c),
+          s"seed $seed violations")
+        // the panel exercises what it claims: T = 33 excluded, null scope
+        // kept, a singular scope unscored, T = 1 scored, the plant flagged
+        val byKey = got.groupBy("__key").agg(
+          count(lit(1)).as("n"), count(col("d2")).as("n_d2"),
+          max("t_slots").as("t"), max(col("flag_outlier").cast("int")).as("flag"))
+          .collect().map(r => r.getString(0) -> r).toMap
+        assert(byKey.keySet == Set("a", "b", "∅", "sing", "one"), byKey.keySet)
+        assert(byKey("sing").getLong(2) == 0 && byKey("sing").isNullAt(3))
+        assert(byKey("one").getInt(3) == 1 && byKey("one").getLong(2) == byKey("one").getLong(1))
+        assert(byKey("a").getLong(1) == 21 && byKey("a").getInt(4) == 1)
+        val pass = UnPanelOutlier.verdictsFrom(got, c).select("partition", "pass").collect()
+          .map(r => r.getString(0) -> r).toMap
+        assert(pass("sing").isNullAt(1) && !pass("a").getBoolean(1))
+      }
+    }
+
+  test("co-moment merge ≡ one pass over the same vectors, in any split") {
+    val rnd = new Random(5)
+    val ys = Array.fill(40)(Array.fill(6)(rnd.nextGaussian() * 3 + 10))
+    def fold(vs: Seq[Array[Double]]) =
+      vs.foldLeft(UnCov.emptyMoments)((b, y) => UnCov.add(b, y))
+    val whole = fold(ys.toSeq)
+    for (cut <- Seq(1, 17, 39)) {
+      val merged = UnCov.merge(fold(ys.take(cut).toSeq), fold(ys.drop(cut).toSeq))
+      assert(merged.n == 40)
+      merged.mean.zip(whole.mean).foreach { case (a, b) => assert(close(a, b)) }
+      merged.m2.zip(whole.m2).foreach { case (a, b) => assert(close(a, b)) }
+    }
+    // and the two-pass textbook moments
+    val mu = Array.tabulate(6)(j => ys.map(_(j)).sum / 40)
+    for (i <- 0 until 6; j <- 0 until 6)
+      assert(close(whole.m2(i * 6 + j), ys.map(y => (y(i) - mu(i)) * (y(j) - mu(j))).sum))
+  }
+
+  test("panel fit state is exact in any update and merge order, and bounded") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
+    val vt = ArrayType(StructType(Seq(StructField("slot", IntegerType), StructField("y", DoubleType))))
+    val agg = graft.stats.PanelFitAggExpr(BoundReference(0, vt, nullable = true), 99.0)
+    val rnd = new Random(11)
+    // 30 complete subjects over slots {1, 2, 3}; 10 incomplete ones
+    val subjects = (0 until 40).map { s =>
+      val slots = if (s < 30) Seq(1, 2, 3) else Seq(Seq(1, 2), Seq(2, 3), Seq(3))(s % 3)
+      slots.map(t => (t, 10.0 * t + rnd.nextGaussian()))
+    }
+    def row(v: Seq[(Int, Double)]) =
+      InternalRow(new GenericArrayData(v.map { case (t, y) => InternalRow(t, y): Any }.toArray))
+    // `parts` partial states, each through the shuffle's byte form, merged
+    def run(order: Seq[Seq[(Int, Double)]], parts: Int): InternalRow = {
+      val size = math.ceil(order.size.toDouble / parts).toInt
+      val bufs = order.grouped(size).map(_.foldLeft(agg.createAggregationBuffer())(
+        (b, v) => agg.update(b, row(v)))).toSeq
+      agg.eval(bufs.map(b => agg.deserialize(agg.serialize(b))).reduce(agg.merge))
+        .asInstanceOf[InternalRow]
+    }
+    val ref = run(subjects, 1)
+    assert(ref.getInt(0) == 3 && ref.getLong(1) == 30L)
+    for (seed <- 1 to 5; parts <- Seq(2, 3, 7)) {
+      val got = run(new Random(seed).shuffle(subjects), parts)
+      assert(got.getInt(0) == 3 && got.getLong(1) == 30L, s"seed $seed parts $parts")
+      got.getArray(2).toDoubleArray().zip(ref.getArray(2).toDoubleArray())
+        .foreach { case (a, b) => assert(close(a, b)) }
+      assert(got.getDouble(4) == ref.getDouble(4))
+    }
+    // one more slot, seen on a single subject, leaves no subject complete
+    val wider = run(subjects :+ Seq((4, 1.0)), 3)
+    assert(wider.getInt(0) == 4 && wider.isNullAt(1) && wider.isNullAt(3))
+    // past MaxSlots the key is excluded and the state stays empty
+    val wide = agg.update(agg.createAggregationBuffer(),
+      row((1 to UnCov.MaxSlots + 1).map(t => (t, 1.0))))
+    assert(wide.domain == null && wide.cm.n == 0 && agg.eval(wide) == null)
   }
 }
