@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   * processed per unit (a partition column value, e.g. warc_ts quarter);
   * each completed unit commits its results + manifest line through
   * TableIO; a restarted run anti-joins pending units against the manifest
-  * and only computes those. Verdict semantics are unit-local by
-  * construction (every check's scope includes the unit column), so
-  * resume ≡ fresh run — property-tested.
+  * and only computes those. Verdicts are unit-local because each unit is
+  * a separate `run` over `df.filter(unit)` — the checks' scopes do not
+  * include the unit column — so resume ≡ fresh run (property-tested).
   */
 object Runner {
 

@@ -17,7 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `regexp_replace` passes over a doubled-length padded copy of the text —
   * 5 languages × 3 markers × (pad + strip + 2 length scans) ≈ 60 regex/
   * string passes per row (the whole cost of q32 and the stopword part of
-  * q33). Here the lowered text is tokenized once on 0x20 runs (the
+  * q33). Here the lowered text is tokenized once on 0x20 runs
+  * (`TextNorm`, the tokenizer and case mapping of every text kernel; the
   * double-padding construction counts exactly the tokens byte-equal to the
   * marker, splitting on spaces only — tabs/newlines ride inside tokens)
   * and each token is matched against the marker set.
@@ -47,28 +48,27 @@ case class MarkerCounts(child: Expression, markers: Seq[Seq[String]])
       ws.map(w => (w.getBytes("UTF-8"), g))
     }.toArray
 
+  @transient private lazy val icu = TextNorm.icuCaseMappings
+
   override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].toLowerCase.getBytes
+    val bytes = TextNorm.lower(input.asInstanceOf[UTF8String], icu).getBytes
+    val spans = TextNorm.wordSpans(bytes)
     val counts = new Array[Long](markers.size)
-    var i = 0
-    val n = bytes.length
-    while (i < n) {
-      while (i < n && bytes(i) == ' ') i += 1
-      val start = i
-      while (i < n && bytes(i) != ' ') i += 1
-      val len = i - start
-      if (len > 0) {
-        var m = 0
-        while (m < table.length) {
-          val w = table(m)._1
-          if (w.length == len) {
-            var j = 0
-            while (j < len && bytes(start + j) == w(j)) j += 1
-            if (j == len) { counts(table(m)._2) += 1; m = table.length }
-            else m += 1
-          } else m += 1
-        }
+    var t = 0
+    while (t < spans.length) {
+      val start = spans(t)
+      val len = spans(t + 1) - start
+      var m = 0
+      while (m < table.length) {
+        val w = table(m)._1
+        if (w.length == len) {
+          var j = 0
+          while (j < len && bytes(start + j) == w(j)) j += 1
+          if (j == len) { counts(table(m)._2) += 1; m = table.length }
+          else m += 1
+        } else m += 1
       }
+      t += 2
     }
     new GenericArrayData(counts)
   }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -21,12 +19,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * functions interpreted per shingle, allocating k md5 HEX STRINGS plus
   * two lambda arrays per shingle — measured ~4.3 ms·core per document at
   * 30 M pages (the op that dominated the round-5 compute-scaling leg).
-  * This expression walks the shingle windows over pre-encoded word bytes,
-  * digests into ONE reusable 16-byte scratch (`MessageDigest.digest(buf,
-  * off, len)`), and keeps k running minima as raw digests — no per-shingle
-  * allocation at all. Hex rendering happens once, on the k winners, so the
-  * output (and therefore every LSH band key, q28/q29 and their DuckDB
-  * oracles) is unchanged.
+  * This expression splits the words once (`TextNorm`, the tokenizer it
+  * shares with `Shingles`), walks the shingle windows as byte ranges of
+  * the space-collapsed text, digests into ONE reusable per-thread 16-byte
+  * scratch (`MessageDigest.digest(buf, off, len)`), and keeps k running
+  * minima as raw digests — no per-shingle allocation at all. Hex
+  * rendering happens once, on the k winners, so the output (and therefore
+  * every LSH band key, q28/q29 and their DuckDB oracles) is unchanged.
   *
   * Semantics replicated exactly from the declarative form:
   *   - words  = split(trim(text), " +")   (trim strips 0x20 only — Spark's
@@ -64,70 +63,37 @@ case class MinHashSignature(child: Expression, shingleN: Int, k: Int)
     Array.tabulate(k)(i => s"$i|".getBytes("UTF-8"))
 
   override def nullSafeEval(input: Any): Any = {
-    val raw = input.asInstanceOf[UTF8String].toString
-    // Spark `trim`: strip the space character only (NOT Java String.trim,
-    // which also strips \t \n and would split differently)
-    var b = 0
-    var e = raw.length
-    while (b < e && raw.charAt(b) == ' ') b += 1
-    while (e > b && raw.charAt(e - 1) == ' ') e -= 1
-    if (e == b) return new GenericArrayData(new Array[Any](k)) // k nulls
-    val words = raw.substring(b, e).split(" +")
-    val win = math.min(words.length, shingleN)
-    val nShingles = math.max(words.length - shingleN + 1, 1)
-    val wordBytes = new Array[Array[Byte]](words.length)
-    var wi = 0
-    while (wi < words.length) { wordBytes(wi) = words(wi).getBytes("UTF-8"); wi += 1 }
+    val raw = input.asInstanceOf[UTF8String].getBytes
+    val spans = TextNorm.wordSpans(raw)
+    val nWords = spans.length / 2
+    if (nWords == 0) return new GenericArrayData(new Array[Any](k)) // k nulls
+    val text = TextNorm.collapse(raw, spans)
+    val win = math.min(nWords, shingleN)
 
-    val md = MessageDigest.getInstance("MD5")
-    val scratch = new Array[Byte](16)
-    val minima = new Array[Array[Byte]](k)
+    val md = SimHash64.localMd5.get()
+    md.reset()
+    val scratch = SimHash64.localDigestBuf.get()
+    val minima = new Array[Byte](16 * k)
     var s = 0
-    while (s < nShingles) {
+    while (s <= nWords - win) {
+      // shingle s: words s .. s+win-1, contiguous in the collapsed text
+      val from = spans(2 * s)
+      val len = spans(2 * (s + win - 1) + 1) - from
       var seed = 0
       while (seed < k) {
         md.update(prefixes(seed))
-        var w = 0
-        while (w < win) {
-          if (w > 0) md.update(' '.toByte)
-          md.update(wordBytes(s + w))
-          w += 1
-        }
+        md.update(text, from, len)
         md.digest(scratch, 0, 16) // finalizes into scratch and resets md
-        val cur = minima(seed)
-        if (cur == null) minima(seed) = scratch.clone()
-        else if (unsignedLess(scratch, cur)) System.arraycopy(scratch, 0, cur, 0, 16)
+        if (s == 0 || MinHashSignature.unsignedLess(scratch, 0, minima, 16 * seed))
+          System.arraycopy(scratch, 0, minima, 16 * seed, 16)
         seed += 1
       }
       s += 1
     }
     val out = new Array[Any](k)
     var i = 0
-    while (i < k) { out(i) = UTF8String.fromString(toHex(minima(i))); i += 1 }
+    while (i < k) { out(i) = MinHashSignature.hex(minima, 16 * i); i += 1 }
     new GenericArrayData(out)
-  }
-
-  private def unsignedLess(a: Array[Byte], b: Array[Byte]): Boolean = {
-    var i = 0
-    while (i < 16) {
-      val ai = a(i) & 0xff
-      val bi = b(i) & 0xff
-      if (ai != bi) return ai < bi
-      i += 1
-    }
-    false
-  }
-
-  private def toHex(d: Array[Byte]): String = {
-    val hex = MinHashSignature.HexChars
-    val cs = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      cs(2 * i) = hex((d(i) >> 4) & 0xf)
-      cs(2 * i + 1) = hex(d(i) & 0xf)
-      i += 1
-    }
-    new String(cs)
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
@@ -135,7 +101,33 @@ case class MinHashSignature(child: Expression, shingleN: Int, k: Int)
 }
 
 object MinHashSignature {
-  private[functions] val HexChars = "0123456789abcdef".toCharArray
+  private val HexBytes = "0123456789abcdef".getBytes("US-ASCII")
+
+  /** Unsigned-lexicographic `a[aOff, aOff+16) < b[bOff, bOff+16)` — the
+    * order of the digests' lowercase-hex renderings. */
+  private[functions] def unsignedLess(a: Array[Byte], aOff: Int, b: Array[Byte], bOff: Int): Boolean = {
+    var i = 0
+    while (i < 16) {
+      val ai = a(aOff + i) & 0xff
+      val bi = b(bOff + i) & 0xff
+      if (ai != bi) return ai < bi
+      i += 1
+    }
+    false
+  }
+
+  /** The 16-byte digest at `d[off]` as Spark `md5` renders it: 32
+    * lowercase hex characters. */
+  private[functions] def hex(d: Array[Byte], off: Int): UTF8String = {
+    val out = new Array[Byte](32)
+    var i = 0
+    while (i < 16) {
+      out(2 * i) = HexBytes((d(off + i) >> 4) & 0xf)
+      out(2 * i + 1) = HexBytes(d(off + i) & 0xf)
+      i += 1
+    }
+    UTF8String.fromBytes(out)
+  }
 
   def of(text: Column, shingleN: Int, k: Int): Column =
     GraftBridge.toColumn(

@@ -5,9 +5,26 @@ import org.apache.spark.sql.functions._
 
 /** Text-pipeline primitives for web-scale corpora: shingling, MinHash,
   * n-gram Jaccard, fingerprinting, token counting, language-ID and quality
-  * scoring. All built from codegen'd builtin expressions (no Scala UDFs in
-  * the hot path) so whole-stage codegen spans stay wide and every function
-  * is embarrassingly parallel — no shuffle until the caller aggregates.
+  * scoring. Every function is per-row and embarrassingly parallel — no
+  * shuffle until the caller aggregates — and none is a Scala UDF.
+  *
+  * The row-level text work runs in native one-pass Catalyst expressions
+  * (`CodegenFallback`, sharing `TextNorm`'s tokenizer and case mapping):
+  * `shingles` (`Shingles`), `minhashSignature` (`MinHashSignature`),
+  * `fingerprint` (`NormFingerprint`), `bottomK` (`NormBottomK`),
+  * `tokenCount`/`subwordTokenCount` (`TokenCounts`), `langScore`/`langId`
+  * (`MarkerCounts`) and SimHash (`SimHash64`). Each keeps its builtin
+  * chain here as a `private[graft]` reference form, pinned byte-identical
+  * by TextFunctionsSpec. The rest are builtin column arithmetic.
+  *
+  * Why natives: a higher-order lambda (`transform`, `aggregate`) is
+  * evaluated interpreted per element, and Catalyst does not hoist a
+  * lambda-invariant subtree out of it. A lambda that holds the text's
+  * normalization (`split(trim(text))`, `lower`, `regexp_replace`)
+  * re-normalizes the whole text once per element — O(L²) per row. So
+  * lambdas here may only touch their element (`minhash`); anything that
+  * reads the whole text runs once per row, natively. PlanSpec guards q28
+  * and q35 for this.
   *
   * Hashing is md5-based: deterministic across JVMs, partitions and engines
   * (the DuckDB oracle computes the identical md5 strings), unlike
@@ -45,9 +62,14 @@ object TextFunctions {
     size(regexp_extract_all(lower(text), lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0))).cast("long")
 
   /** Word n-gram shingles (n >= 1). Docs shorter than n words yield a single
-    * whole-text shingle so every doc gets a signature. All element_at
-    * indices stay in bounds (ANSI mode). */
-  def shingles(text: Column, n: Int): Column = {
+    * whole-text shingle so every doc gets a signature. Routed through the
+    * native one-pass `Shingles` expression (byte-identical to the
+    * declarative form below). */
+  def shingles(text: Column, n: Int): Column = Shingles.of(text, n)
+
+  /** Declarative reference form of [[shingles]] — the shape the DuckDB
+    * oracles compute. All element_at indices stay in bounds (ANSI mode). */
+  private[graft] def shinglesDeclarative(text: Column, n: Int): Column = {
     val w = words(text)
     val full = transform(
       sequence(lit(1), size(w) - (n - 1)),
@@ -85,7 +107,7 @@ object TextFunctions {
     * `least` skips nulls). Kept builtin-only as the semantic spec the
     * native expression is tested against. */
   private[graft] def minhashSignatureFold(text: Column, shingleN: Int, k: Int): Column = {
-    val sh = shingles(text, shingleN)
+    val sh = shinglesDeclarative(text, shingleN)
     val init = array_repeat(lit(null).cast("string"), k)
     aggregate(sh, init, (acc, s) =>
       zip_with(acc,
@@ -124,8 +146,14 @@ object TextFunctions {
     md5(regexp_replace(lower(trim(text)), " +", " "))
 
   /** Bottom-k sketch of char k-gram hashes — a winnowing-style document
-    * fingerprint; overlap of bottom-k sets estimates resemblance. */
-  def bottomK(text: Column, gram: Int, k: Int): Column = {
+    * fingerprint; overlap of bottom-k sets estimates resemblance. Routed
+    * through the native one-pass `NormBottomK` expression (byte-identical
+    * to the declarative form below). */
+  def bottomK(text: Column, gram: Int, k: Int): Column = NormBottomK.of(text, gram, k)
+
+  /** Declarative reference form of [[bottomK]] — the shape the DuckDB
+    * oracle of q35 computes. */
+  private[graft] def bottomKDeclarative(text: Column, gram: Int, k: Int): Column = {
     val t = regexp_replace(lower(trim(text)), " +", " ")
     slice(array_sort(transform(
       sequence(lit(1), greatest(length(t) - (gram - 1), lit(1))),

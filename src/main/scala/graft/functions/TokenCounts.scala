@@ -40,16 +40,7 @@ case class TokenCount(child: Expression)
     }
 
   override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    var count = 0L
-    var i = 0
-    val n = bytes.length
-    while (i < n) {
-      while (i < n && bytes(i) == ' ') i += 1
-      if (i < n) count += 1
-      while (i < n && bytes(i) != ' ') i += 1
-    }
-    java.lang.Long.valueOf(count)
+    java.lang.Long.valueOf(TextNorm.wordCount(input.asInstanceOf[UTF8String].getBytes).toLong)
   }
 
   override protected def withNewChildInternal(newChild: Expression): TokenCount =
@@ -61,8 +52,8 @@ case class TokenCount(child: Expression)
   * CODE POINT — exactly Java regex's non-overlapping matching of
   * `[a-z]+|[0-9]+|[^a-z0-9 ]` (character classes match code points, so a
   * 4-byte supplementary character counts once; spaces match nothing).
-  * Lowercasing is `UTF8String.toLowerCase` — the same call Spark's
-  * `Lower` makes under the default collation, so characters that
+  * Lowercasing is `TextNorm.lower` — the call Spark's `Lower` makes
+  * under the default collation, so characters that
   * lowercase INTO ASCII (e.g. KELVIN SIGN → 'k') merge into letter runs
   * identically. NULL → NULL (size(null) is null under the default
   * non-legacy conf). */
@@ -80,8 +71,10 @@ case class SubwordTokenCount(child: Expression)
         TypeCheckResult.TypeCheckFailure(s"subword_token_count needs string, got $other")
     }
 
+  @transient private lazy val icu = TextNorm.icuCaseMappings
+
   override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].toLowerCase.getBytes
+    val bytes = TextNorm.lower(input.asInstanceOf[UTF8String], icu).getBytes
     var count = 0L
     var i = 0
     val n = bytes.length

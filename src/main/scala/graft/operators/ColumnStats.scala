@@ -43,56 +43,42 @@ object ColumnStats {
       .withColumn("partition", Results.partitionString(scope))
   }
 
-  /** Verdicts for every bound asserted by every check, from the profiled frame. */
+  /** Verdicts for every bound asserted by every check, from the profiled
+    * frame — ONE projection of it: each profile row emits all its bound
+    * rows through `inline(array(struct(...)))`. (A union of one projection
+    * per bound let the optimizer prune each branch's aggregate to the
+    * columns it read, so the branches shared no exchange and each scanned
+    * the input again.) The KLL quantile UDF runs once per quantile bound,
+    * in a projection below the generator, feeding both `stat` and `pass`. */
   def verdicts(profiled: DataFrame, checks: Seq[ColumnStatsCheck]): DataFrame = {
-    val spark = profiled.sparkSession
     val qUdf = udf((bytes: Array[Byte], q: Double) =>
       if (bytes == null) Double.NaN else KllSketchAgg.quantiles(bytes, Array(q))(0))
-    val frames = checks.flatMap { c =>
-      val base = profiled.select(
-        col("partition"),
-        col(s"${c.column}__n").as("n"),
-        col(s"${c.column}__n_nonnull").as("nn"),
-        col(s"${c.column}__min").as("mn"),
-        col(s"${c.column}__max").as("mx"),
-        col(s"${c.column}__distinct").as("nd"),
-        col(s"${c.column}__kll").as("kll"))
-      val checksHere = Seq.newBuilder[DataFrame]
-      c.maxMissingFrac.foreach { thr =>
-        checksHere += base.select(col("partition"),
-          lit("missing_frac").as("metric"),
-          (lit(1.0) - col("nn") / col("n")).as("stat"),
-          lit(thr).as("threshold"), col("n").as("n_obs"),
-          ((lit(1.0) - col("nn") / col("n")) <= thr).as("pass"))
-      }
-      c.minAllowed.foreach { lo =>
-        checksHere += base.select(col("partition"), lit("min").as("metric"),
-          col("mn").as("stat"), lit(lo).as("threshold"), col("nn").as("n_obs"),
-          (col("mn").isNull || col("mn") >= lo).as("pass"))
-      }
-      c.maxAllowed.foreach { hi =>
-        checksHere += base.select(col("partition"), lit("max").as("metric"),
-          col("mx").as("stat"), lit(hi).as("threshold"), col("nn").as("n_obs"),
-          (col("mx").isNull || col("mx") <= hi).as("pass"))
-      }
-      c.minDistinct.foreach { lo =>
-        checksHere += base.select(col("partition"), lit("distinct_min").as("metric"),
-          col("nd").cast("double").as("stat"), lit(lo.toDouble).as("threshold"),
-          col("nn").as("n_obs"), (col("nd") >= lo).as("pass"))
-      }
-      c.maxDistinct.foreach { hi =>
-        checksHere += base.select(col("partition"), lit("distinct_max").as("metric"),
-          col("nd").cast("double").as("stat"), lit(hi.toDouble).as("threshold"),
-          col("nn").as("n_obs"), (col("nd") <= hi).as("pass"))
-      }
-      c.quantileBounds.foreach { case (q, lo, hi) =>
-        val qv = qUdf(col("kll"), lit(q))
-        checksHere += base.select(col("partition"), lit(s"q$q").as("metric"),
-          qv.as("stat"), lit(hi).as("threshold"), col("nn").as("n_obs"),
-          (qv.isNaN || (qv >= lo && qv <= hi)).as("pass"))
-      }
-      checksHere.result().map(f => Results.toVerdicts(f, c.id, c.severity))
+    val quantiles = checks.flatMap(c => c.quantileBounds.map(b => (c.column, b._1))).distinct
+    val withQ = profiled.select(col("*") +: quantiles.zipWithIndex.map { case ((c, q), i) =>
+      qUdf(col(s"${c}__kll"), lit(q)).as(s"__q$i")
+    }: _*)
+    val rows = checks.flatMap { c =>
+      def stat(name: String) = col(s"${c.column}__$name")
+      val (n, nn, mn, mx, nd) =
+        (stat("n"), stat("n_nonnull"), stat("min"), stat("max"), stat("distinct"))
+      // one verdict row, fields in Results.verdictSchema order
+      def row(metric: String, value: Column, threshold: Double, nObs: Column, pass: Column) =
+        struct(lit(c.id).as("check_id"), col("partition"), pass.as("pass"),
+          lit(metric).as("metric"), value.cast("double").as("stat"),
+          lit(null).cast("double").as("p_value"), lit(threshold).as("threshold"),
+          nObs.cast("long").as("n_obs"), lit(c.severity).as("severity"))
+      val missing = lit(1.0) - nn / n
+      c.maxMissingFrac.map(thr => row("missing_frac", missing, thr, n, missing <= thr)) ++
+        c.minAllowed.map(lo => row("min", mn, lo, nn, mn.isNull || mn >= lo)) ++
+        c.maxAllowed.map(hi => row("max", mx, hi, nn, mx.isNull || mx <= hi)) ++
+        c.minDistinct.map(lo => row("distinct_min", nd, lo.toDouble, nn, nd >= lo)) ++
+        c.maxDistinct.map(hi => row("distinct_max", nd, hi.toDouble, nn, nd <= hi)) ++
+        c.quantileBounds.map { case (q, lo, hi) =>
+          val qv = col(s"__q${quantiles.indexOf((c.column, q))}")
+          row(s"q$q", qv, hi, nn, qv.isNaN || (qv >= lo && qv <= hi))
+        }
     }
-    frames.reduceOption(_ unionByName _).getOrElse(Results.emptyVerdicts(spark))
+    if (rows.isEmpty) Results.emptyVerdicts(profiled.sparkSession)
+    else withQ.select(inline(array(rows: _*)))
   }
 }

@@ -369,6 +369,46 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("q28 and q35 do not re-normalize the text per array element") {
+    import org.apache.spark.sql.catalyst.expressions._
+    // a lambda evaluates once per element and Catalyst does not hoist its
+    // row-invariant subtrees: a split/lower/regex inside it re-normalizes
+    // the whole text per shingle or window (O(L²) per row)
+    def normalizingLambdas(df: org.apache.spark.sql.DataFrame): Seq[LambdaFunction] =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions)
+        .flatMap(_.collect { case l: LambdaFunction => l })
+        .filter(_.function.exists {
+          case _: StringSplit | _: RegExpReplace | _: Lower => true
+          case _ => false
+        })
+    for (q <- Seq("q28_minhash_sig", "q35_fingerprint")) {
+      val bad = normalizingLambdas(SparkEntry.queries(q)(spark, sf("sf0.001")))
+      assert(bad.isEmpty, s"$q lambdas normalize the text per element:\n${bad.mkString("\n")}")
+    }
+  }
+
+  test("score_stats: every bound row comes from ONE scan of the cached input") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case n => n +: n.children.flatMap(nodes)
+    }
+    graft.engine.CacheTracker.scope {
+      val pages = graft.engine.CacheTracker.cached(graft.sources.Pages.generate(spark, 1000))
+      val check = graft.checks.ColumnStatsCheck("s", "score",
+        maxMissingFrac = Some(0.0), minAllowed = Some(0.0), maxAllowed = Some(100.0),
+        quantileBounds = Seq((0.5, 20.0, 80.0)))
+      val v = graft.operators.ColumnStats.verdicts(
+        graft.operators.ColumnStats.profile(pages, Seq(check)), Seq(check))
+      val scans = nodes(v.queryExecution.executedPlan).count(_.isInstanceOf[InMemoryTableScanExec])
+      assert(scans == 1, s"four bounds must share one input scan:\n${v.queryExecution.executedPlan}")
+      assert(v.collect().map(_.getAs[String]("metric")).sorted.toSeq ==
+        Seq("max", "min", "missing_frac", "q0.5"))
+    }
+  }
+
   test("whole-stage codegen covers the hot scan→project paths") {
     // AQE wraps the plan lazily; force the final plan by executing
     val df = SparkEntry.queries("q01_agg_pricing")(spark, sf("sf0.001"))

@@ -35,6 +35,111 @@ class TextFunctionsSpec extends SparkSpec {
     assert(empty.isEmpty)
   }
 
+  // the edges of the word and character pipelines: empty, all-space, space
+  // runs, leading/trailing spaces, tabs and newlines (kept inside words —
+  // Spark trim/split are 0x20-only), fewer words than n, fewer characters
+  // than gram, 2-, 3- and 4-byte UTF-8 code points, upper-case non-ASCII
+  // (U+2C2F and U+10570 lowercase under ICU but not under the JDK's
+  // Unicode tables), repeated windows, and NULL
+  private val edgeTexts = Seq(
+    "the quick brown fox jumps over the lazy dog", "one two", "solo", "", " ", "   ",
+    "  a   b  c ", "  lead", "trail  ", "a\tb\nc d", "tab\tonly", "line\nbreak\n",
+    "ab", "abcd", "abcde", "x y", "HÉLLO   Wörld DÉJÀ vu", "中文 字符 测试 文本",
+    "😀😀 ab 😀1 𝔸𝔹", "\u2C2F\u2C2F CAUDATE \uD801\uDD70X", "KELVIN \u212A İstanbul ΣΊΣΥΦΟΣ",
+    "aaaaaaaa aaaaaaaa", "dup dup dup dup", null)
+
+  /** Every row of `cols` over `texts`, as (text, values) pairs. */
+  private def evalAll(texts: Seq[String], cols: org.apache.spark.sql.Column*) =
+    texts.toDF("t").select(cols: _*).collect().toSeq.zip(texts)
+
+  test("shingles native form ≡ declarative n-gram chain (byte-identical), incl. edges") {
+    for (n <- Seq(1, 2, 3, 5)) {
+      val nat = TextFunctions.shingles($"t", n)
+      val ref = TextFunctions.shinglesDeclarative($"t", n)
+      val df = edgeTexts.toDF("t").select(nat.as("nat"), ref.as("ref"))
+      assert(df.schema("nat").copy(name = "ref") == df.schema("ref"), s"n=$n schema")
+      df.collect().zip(edgeTexts).foreach { case (r, t) =>
+        assert(r.get(0) == r.get(1), s"n=$n shingles('$t'): ${r.get(0)} vs ${r.get(1)}")
+      }
+    }
+    // the pinned edges themselves: a NULL text has NULL shingles (as the
+    // declarative form gives), all-space text none, a short text one
+    val r = evalAll(Seq(null, "   ", " a  b ", "a  b   c"), TextFunctions.shingles($"t", 3))
+      .map(_._1)
+    assert(r(0).isNullAt(0))
+    assert(r(1).getSeq[String](0).isEmpty)
+    assert(r(2).getSeq[String](0) == Seq("a b"))
+    assert(r(3).getSeq[String](0) == Seq("a b c"))
+  }
+
+  test("bottomK native form ≡ declarative char-gram chain (byte-identical), incl. edges") {
+    for (gram <- Seq(1, 3, 5, 9); k <- Seq(1, 3, 8)) {
+      val nat = TextFunctions.bottomK($"t", gram, k)
+      val ref = TextFunctions.bottomKDeclarative($"t", gram, k)
+      val df = edgeTexts.toDF("t").select(nat.as("nat"), ref.as("ref"),
+        array_join(nat, ",").as("jn"), array_join(ref, ",").as("jr"))
+      assert(df.schema("nat").copy(name = "ref") == df.schema("ref"), s"gram=$gram k=$k schema")
+      df.collect().zip(edgeTexts).foreach { case (r, t) =>
+        assert(r.get(0) == r.get(1), s"gram=$gram k=$k bottomK('$t'): ${r.get(0)} vs ${r.get(1)}")
+        assert(r.get(2) == r.get(3), s"gram=$gram k=$k array_join('$t')")
+      }
+    }
+    val md5Empty = "d41d8cd98f00b204e9800998ecf8427e"
+    val r = evalAll(Seq(null, "", "   ", "Ab"),
+      TextFunctions.bottomK($"t", 5, 3), array_join(TextFunctions.bottomK($"t", 5, 3), ","))
+      .map(_._1)
+    assert(r(0).getSeq[String](0) == Seq(null) && r(0).getString(1) == "") // NULL → [null] → ""
+    assert(r(1).getSeq[String](0) == Seq(md5Empty) && r(2).getSeq[String](0) == Seq(md5Empty))
+    assert(r(3).getSeq[String](0) == Seq(java.security.MessageDigest.getInstance("MD5")
+      .digest("ab".getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString))
+  }
+
+  test("seeded differential: every native text kernel ≡ its declarative reference") {
+    val rng = new scala.util.Random(11)
+    // word characters by UTF-8 width, upper-case and case-special ones
+    // included; separators are space runs, tabs and newlines
+    val chars = Seq("a", "b", "e", "t", "h", "Z", "Q", "0", "7", ".", ",", "!", "-",
+      "é", "Ü", "ß", "Σ", "ς", "İ", "\u212A", "中", "€", "\u2C2F", "😀", "𝔸", "\uD801\uDD70")
+    val markers = TextFunctions.langMarkers.flatMap(_._2)
+    def word(): String =
+      if (rng.nextInt(5) == 0) markers(rng.nextInt(markers.size))
+      else Seq.fill(1 + rng.nextInt(7))(chars(rng.nextInt(chars.size))).mkString
+    def sep(): String = rng.nextInt(10) match {
+      case 0 => "\t"
+      case 1 => "\n"
+      case 2 => "   "
+      case 3 => "  "
+      case _ => " "
+    }
+    def text(): String = rng.nextInt(20) match {
+      case 0 => null
+      case 1 => ""
+      case 2 => " " * (1 + rng.nextInt(3))
+      case _ =>
+        val body = Seq.fill(1 + rng.nextInt(14))(word()).mkString(sep())
+        (if (rng.nextBoolean()) " " * rng.nextInt(3) else "") + body +
+          (if (rng.nextBoolean()) " " * rng.nextInt(3) else "")
+    }
+    val texts = Seq.fill(300)(text()) ++ edgeTexts
+    val t = $"t"
+    val TF = TextFunctions
+    val pairs = Seq(
+      "fingerprint" -> (TF.fingerprint(t), TF.fingerprintDeclarative(t)),
+      "tokenCount" -> (TF.tokenCount(t), TF.tokenCountDeclarative(t)),
+      "subwordTokenCount" -> (TF.subwordTokenCount(t), TF.subwordTokenCountDeclarative(t)),
+      "simhash" -> (SimHash64.ofText(t), SimHash64.ofTokens(TF.words(t))),
+      "minhashSignature" -> (TF.minhashSignature(t, 3, 5), TF.minhashSignatureFold(t, 3, 5)),
+      "shingles" -> (TF.shingles(t, 3), TF.shinglesDeclarative(t, 3)),
+      "bottomK" -> (TF.bottomK(t, 4, 3), TF.bottomKDeclarative(t, 4, 3)))
+    val rows = evalAll(texts, pairs.flatMap { case (_, (n, d)) => Seq(n, d) }: _*)
+    for ((row, txt) <- rows; ((name, _), i) <- pairs.zipWithIndex)
+      assert(row.get(2 * i) == row.get(2 * i + 1),
+        s"$name('$txt'): native ${row.get(2 * i)} vs declarative ${row.get(2 * i + 1)}")
+    // the draw reached the edges it is meant to cover
+    assert(texts.count(_ == null) >= 5 && texts.count(x => x != null && x.trim.isEmpty) >= 5)
+    assert(texts.exists(x => x != null && x.exists(Character.isSurrogate)))
+  }
+
   test("minhash signature is deterministic and permutation-stable") {
     val df = Seq("the quick brown fox jumps over the lazy dog").toDF("t")
     val s1 = df.select(TextFunctions.minhashSignature($"t", 3, 4).as("s"))
@@ -54,7 +159,7 @@ class TextFunctionsSpec extends SparkSpec {
     val df = Seq("the quick brown fox jumps over the lazy dog",
       "one two", "solo", "", "   ", "  a   b  c ", "a\tb\nc d",
       "héllo wörld déjà vu", null).toDF("t")
-    val sh = TextFunctions.shingles($"t", 3)
+    val sh = TextFunctions.shinglesDeclarative($"t", 3)
     val naive = array((0 until 4).map(s => TextFunctions.minhash(sh, s)): _*)
     val rows = df.select(TextFunctions.minhashSignature($"t", 3, 4).as("native"),
       TextFunctions.minhashSignatureFold($"t", 3, 4).as("fold"),
