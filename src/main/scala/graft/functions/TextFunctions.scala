@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   * `shingles` (`Shingles`), `minhashSignature` (`MinHashSignature`),
   * `fingerprint` (`NormFingerprint`), `bottomK` (`NormBottomK`),
   * `tokenCount`/`subwordTokenCount` (`TokenCounts`), `langScore`/`langId`
-  * (`MarkerCounts`) and SimHash (`SimHash64`). Each keeps its builtin
-  * chain here as a `private[graft]` reference form, pinned byte-identical
-  * by TextFunctionsSpec. The rest are builtin column arithmetic.
+  * (`MarkerCounts`) and SimHash (`SimHash64`). TextFunctionsSpec pins
+  * each byte-identical to a builtin reference form (the
+  * `private[graft]` `*Declarative`/`*Fold` chains here; SimHash's over
+  * `words`). The rest are builtin column arithmetic.
   *
   * Why natives: a higher-order lambda (`transform`, `aggregate`) is
   * evaluated interpreted per element, and Catalyst does not hoist a
