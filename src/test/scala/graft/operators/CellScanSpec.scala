@@ -55,6 +55,30 @@ class CellScanSpec extends SparkSpec {
     df.unpersist()
   }
 
+  test("drift bin edges: the fused edge aggregate ≡ a filter-first pass on null and NaN inputs") {
+    import spark.implicits._
+    // filter-first form: drop null and NaN rows, then min/max
+    def filterFirst(df: DataFrame, c: DriftCheck): (Any, Any) = {
+      val v = col(c.column).cast("double")
+      val r = df.filter(v.isNotNull && !isnan(v)).agg(min(v).as("mn"), max(v).as("mx"))
+        .select(col("mn"), when(col("mx") > col("mn"), (col("mx") - col("mn")) / c.bins)
+          .otherwise(1.0)).collect()(0)
+      (r.get(0), r.get(1))
+    }
+    val nan = Double.NaN
+    val df = Seq[(Option[Double], Option[Double], Option[Double], Option[Double])](
+      (Some(3.0), Some(nan), None, Some(2.0)),
+      (None, Some(nan), None, Some(2.0)),
+      (Some(nan), None, None, Some(nan)),
+      (Some(-1.5), Some(nan), None, None),
+      (Some(7.25), None, None, Some(2.0))).toDF("mixed", "nan_only", "null_only", "constant")
+    val checks = df.columns.toSeq.map(c => DriftCheck(s"dr_$c", c, "ts", bins = 4))
+    checks.foreach { c =>
+      val r = Drift.edgesMulti(df, Seq((c, "__mn", "__w"))).collect()(0)
+      assert((r.get(0), r.get(1)) == filterFirst(df, c), c.column)
+    }
+  }
+
   test("Runner cache pruning: every check family runs on an input with an unread payload column") {
     import spark.implicits._
     // the Runner caches only referencedColumns — a family reading a column
