@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.checks._
+import graft.engine.SharedScans
 import graft.operators._
 import graft.queries.Flagship
 import graft.sources.Pages
@@ -54,22 +55,16 @@ object PlanDump {
     lazy val pages = Pages.generate(spark, 20000, numPartitions = 8)
     val suite = Flagship.suite(spark)
     def first[C <: Check](pf: PartialFunction[Check, C]): C = suite.checks.collectFirst(pf).get
-    lazy val bi = first { case c: ByteIdentityCheck => c }
-    lazy val p1 = KeyScan.phase1(pages, Seq(bi.keyCol))
+    // the Runner's own shared scans, over the generated table
+    lazy val shared = new SharedScans(pages, suite.checks, suite.refTables, suite.keyCol)
+    lazy val uniqueId = first { case c: UniquenessCheck => c }.id
     lazy val nearDup = Dedup.nearDupSurfaces(pages, "url", "text")
     Seq(
       // categorical + digit + drift counts in ONE pass
-      "cellscan" -> { () =>
-        val dr = first { case c: DriftCheck => c }
-        val base = pages.crossJoin(broadcast(Drift.edges(pages, dr, "__dr0_mn", "__dr0_w")))
-        CellScan.counts(base, Seq(
-          CategoricalConsistency.cellFamily(first { case c: CategoricalConsistencyCheck => c }),
-          DigitPreference.cellFamily(first { case c: DigitPreferenceCheck => c }),
-          Drift.cellFamily(dr, "__dr0_mn", "__dr0_w")))
-      },
+      "cellscan" -> (() => shared.cellCounts.get),
       // uniqueness + byte-identity candidates, then ONE semi-join + exact groupBy
-      "keyscan_phase1" -> (() => p1),
-      "keyscan_phase2" -> (() => KeyScan.phase2(pages, Seq(bi.keyCol), bi.column, p1)),
+      "keyscan_phase1" -> (() => shared.keyPhase1(uniqueId)),
+      "keyscan_phase2" -> (() => shared.keyPhase2(uniqueId)),
       "referential" -> (() => Referential.orphans(pages, Pages.hosts(spark),
         first { case c: ReferentialCheck => c }, suite.keyCol)),
       // KLL + HLL sketches in one scan

@@ -1,5 +1,9 @@
 package graft.checks
 
+import graft.engine.SharedScans
+import graft.operators._
+import org.apache.spark.sql.DataFrame
+
 /** The constraint DSL — every reference macro becomes a declarative Check
   * compiled to DataFrame transformations (SURVEY.md §7.1).
   *
@@ -14,6 +18,22 @@ sealed trait Check {
   def id: String
   def scope: Seq[String]
   def severity: String
+
+  /** Every input column the check reads: CheckCompiler validates them
+    * (variableExist.sas:24), and the Runner caches the input pruned to
+    * them — a column read but not declared here fails at run time. */
+  def referencedColumns: Seq[String]
+
+  /** The referenced columns that must be numeric. */
+  def numericColumns: Seq[String] = Nil
+
+  /** The referenced columns that must be a timestamp or a date. */
+  def temporalColumns: Seq[String] = Nil
+
+  /** (verdicts, violations) over the run's input, reading this check's
+    * slice of the run's shared scans; None when the shared scans emit the
+    * check's verdicts themselves (a ColumnStats scope group). */
+  private[graft] def outputs(input: DataFrame, shared: SharedScans): Option[(DataFrame, DataFrame)]
 }
 
 /** Column profile thresholds over one pass of sketch aggregation
@@ -31,7 +51,10 @@ final case class ColumnStatsCheck(
     quantileBounds: Seq[(Double, Double, Double)] = Nil, // (q, lo, hi)
     minDistinct: Option[Long] = None,
     maxDistinct: Option[Long] = None,
-    severity: String = "error") extends Check
+    severity: String = "error") extends Check {
+  def referencedColumns: Seq[String] = column +: scope
+  private[graft] def outputs(input: DataFrame, shared: SharedScans) = None
+}
 
 /** Key-uniqueness: no two rows share `keys` (within scope).
   * Reference analogue: nodupkey hygiene (SURVEY O3); scaled per north rule
@@ -42,7 +65,11 @@ final case class UniquenessCheck(
     keys: Seq[String],
     scope: Seq[String] = Nil,
     maxDuplicates: Long = 0,
-    severity: String = "error") extends Check
+    severity: String = "error") extends Check {
+  def referencedColumns: Seq[String] = keys ++ scope
+  private[graft] def outputs(input: DataFrame, shared: SharedScans) =
+    Some(Uniqueness.outputs(input, this, shared.keyScan(id)))
+}
 
 /** Referential consistency: every non-null `column` value appears in
   * `refTable.refColumn` (anti-join, broadcast when dim is small). North-rule
@@ -55,7 +82,11 @@ final case class ReferentialCheck(
     refColumn: String,
     scope: Seq[String] = Nil,
     maxOrphans: Long = 0,
-    severity: String = "error") extends Check
+    severity: String = "error") extends Check {
+  def referencedColumns: Seq[String] = column +: scope
+  private[graft] def outputs(input: DataFrame, shared: SharedScans) =
+    Some(Referential.outputs(input, shared.refTables(refTable), this, shared.keyCol))
+}
 
 /** Categorical-consistency check — re-expression of %catchk
   * (Categorical_Check.sas): per panel (calendar bin × scope), test each
@@ -82,7 +113,12 @@ final case class CategoricalConsistencyCheck(
                                   // pairwise=true. Default keeps the families
                                   // separate so each surface is independently
                                   // consumable (documented deviation).
-    severity: String = "warn") extends Check
+    severity: String = "warn") extends Check {
+  def referencedColumns: Seq[String] = Seq(valueCol, groupCol) ++ scope ++ dateCol
+  override def temporalColumns: Seq[String] = dateCol.toSeq
+  private[graft] def outputs(input: DataFrame, shared: SharedScans) =
+    Some(CategoricalConsistency.outputs(input, this, shared.cells(id)))
+}
 
 /** Terminal-digit-preference check — re-expression of %digitpref
   * (DigitPref.sas): distribution of last digit at decimal place `place`
@@ -100,7 +136,13 @@ final case class DigitPreferenceCheck(
     alpha: Double = 0.01,
     noneThreshold: Double = 5.0, // % of values without the digit (flag 3)
     minNum: Long = 0,
-    severity: String = "warn") extends Check
+    severity: String = "warn") extends Check {
+  def referencedColumns: Seq[String] = Seq(column, groupCol) ++ scope ++ dateCol
+  override def numericColumns: Seq[String] = Seq(column)
+  override def temporalColumns: Seq[String] = dateCol.toSeq
+  private[graft] def outputs(input: DataFrame, shared: SharedScans) =
+    Some(DigitPreference.outputs(input, this, shared.cells(id)))
+}
 
 /** Group-variance homogeneity — re-expression of %groupComparisons
   * (groupComparisons.sas): whitened mixed-model residuals, Brown-Forsythe
@@ -122,7 +164,13 @@ final case class GroupVarianceCheck(
     method: String = "mom",
     /** One feasible-GLS iteration on the fixed effects (see
       * LongitudinalOutlierCheck.fgls). */
-    fgls: Boolean = false) extends Check
+    fgls: Boolean = false) extends Check {
+  def referencedColumns: Seq[String] =
+    Seq(outcome, groupCol) ++ discCovariates ++ contCovariates ++ scope
+  override def numericColumns: Seq[String] = outcome +: contCovariates
+  private[graft] def outputs(input: DataFrame, shared: SharedScans) =
+    Some(GroupVariance.outputs(input, this))
+}
 
 /** Regression-outlier check — re-expression of %univariatePlot /
   * %bivariatePlot: OLS per scope group, flag |rStudent| >= tinv(cutoff)
@@ -137,7 +185,13 @@ final case class RegressionOutlierCheck(
     scope: Seq[String] = Nil,
     cutoffPct: Double = 90,
     cookCutoff: Option[Double] = None, // e.g. Some(7.0) → flag D > 7/n
-    severity: String = "warn") extends Check
+    severity: String = "warn") extends Check {
+  def referencedColumns: Seq[String] =
+    Seq(outcome, idCol) ++ discCovariates ++ contCovariates ++ scope
+  override def numericColumns: Seq[String] = outcome +: contCovariates
+  private[graft] def outputs(input: DataFrame, shared: SharedScans) =
+    Some(RegressionOutlier.outputs(input, this))
+}
 
 /** Longitudinal within-entity outlier — re-expression of %longitudinalPlot
   * default config: random-intercept residuals per subject, flag
@@ -193,7 +247,14 @@ final case class LongitudinalOutlierCheck(
       * (stats.RandomEffects.remlEstimates) up to
       * RandomEffects.RemlMaxTerms terms; past that CheckCompiler
       * normalizes back to "mom" (the scale default) with a warning. */
-    randomTerms: Seq[String] = Nil) extends Check
+    randomTerms: Seq[String] = Nil) extends Check {
+  def referencedColumns: Seq[String] = Seq(outcome, idCol) ++ discCovariates ++
+    contCovariates ++ randomTerms ++ slopeVar ++ scope
+  override def numericColumns: Seq[String] =
+    (outcome +: contCovariates) ++ randomTerms ++ slopeVar
+  private[graft] def outputs(input: DataFrame, shared: SharedScans) =
+    Some(LongitudinalOutlier.outputs(input, this))
+}
 
 /** Unstructured-covariance panel outlier — the PROC MIXED
   * `repeated <slot> / subject=<id> type=UN` surface of
@@ -223,7 +284,14 @@ final case class UnPanelCheck(
     interval: String = "quarter",
     scope: Seq[String] = Nil,
     cutoffPct: Double = 99.0,
-    severity: String = "warn") extends Check
+    severity: String = "warn") extends Check {
+  def referencedColumns: Seq[String] =
+    Seq(outcome, idCol) ++ Seq(slotCol).filter(_.nonEmpty) ++ dateCol ++ scope
+  override def numericColumns: Seq[String] = Seq(outcome)
+  override def temporalColumns: Seq[String] = dateCol.toSeq
+  private[graft] def outputs(input: DataFrame, shared: SharedScans) =
+    Some(UnPanelOutlier.outputs(input, this))
+}
 
 /** Distribution drift across time windows (north rule): equal-width
   * histogram of `column` per `interval` window of `dateCol`; chi-square +
@@ -239,7 +307,13 @@ final case class DriftCheck(
     scope: Seq[String] = Nil,
     alpha: Double = 0.01,
     ksThreshold: Double = 0.2,
-    severity: String = "warn") extends Check
+    severity: String = "warn") extends Check {
+  def referencedColumns: Seq[String] = Seq(column, dateCol) ++ scope
+  override def numericColumns: Seq[String] = Seq(column)
+  override def temporalColumns: Seq[String] = Seq(dateCol)
+  private[graft] def outputs(input: DataFrame, shared: SharedScans) =
+    Some(Drift.outputs(input, this, shared.cells(id)))
+}
 
 /** Near-duplicate content check — the LLM-pipeline dedup surface as a
   * first-class validation check: exact duplicates by normalized-text
@@ -263,14 +337,24 @@ final case class NearDupCheck(
     maxDupFrac: Double = 0.0,
     maxBucket: Int = 5000,
     scope: Seq[String] = Nil,
-    severity: String = "warn") extends Check
+    severity: String = "warn") extends Check {
+  def referencedColumns: Seq[String] = Seq(idCol, textCol)
+  private[graft] def outputs(input: DataFrame, shared: SharedScans) =
+    Some(Dedup.outputs(input, this))
+}
 
 /** Byte-identity audit: sha2-256 of `column` grouped by key must have
   * exactly one value per key across the table (north-rule text invariant).
+  * The invariant is table-wide, so scope columns are not supported; a
+  * non-empty scope normalizes to global with a warning.
   */
 final case class ByteIdentityCheck(
     id: String,
     keyCol: String,
     column: String,
     scope: Seq[String] = Nil,
-    severity: String = "error") extends Check
+    severity: String = "error") extends Check {
+  def referencedColumns: Seq[String] = Seq(keyCol, column)
+  private[graft] def outputs(input: DataFrame, shared: SharedScans) =
+    Some(ByteIdentity.outputs(input, this, shared.keyScan(id)))
+}

@@ -27,87 +27,29 @@ object CheckCompiler {
   private val NameRe = "^[_a-zA-Z][_a-zA-Z0-9]*$".r
   private val Intervals = Set("year", "half", "quarter", "month", "overall")
 
-  private def colIssues(schema: StructType, id: String, cols: Seq[String],
-      numeric: Seq[String] = Nil, temporal: Seq[String] = Nil): List[Issue] = {
+  /** Structural issues that make a check uncompilable (reference: hard
+    * %put ERROR + abort paths): each referenced column must exist, be
+    * validly named and carry the type its role needs. */
+  def validate(schema: StructType, check: Check): List[Issue] = {
+    val id = check.id
+    val slotIssue = check match {
+      case c: UnPanelCheck if c.slotCol.isEmpty && c.dateCol.isEmpty =>
+        List(Issue(id, "missing_slot", "need slotCol or dateCol"))
+      case _ => Nil
+    }
     val names = schema.fieldNames.toSet
+    val cols = check.referencedColumns
     val missing = cols.filterNot(names.contains)
       .map(c => Issue(id, "missing_column", c))
     val badName = cols.filter(c => NameRe.findFirstIn(c).isEmpty)
       .map(c => Issue(id, "invalid_name", c))
-    val notNum = numeric.filter(names.contains).filterNot { c =>
+    val notNum = check.numericColumns.filter(names.contains).filterNot { c =>
       schema(c).dataType.isInstanceOf[NumericType]
     }.map(c => Issue(id, "not_numeric", c))
-    val notTime = temporal.filter(names.contains).filterNot { c =>
+    val notTime = check.temporalColumns.filter(names.contains).filterNot { c =>
       schema(c).dataType == TimestampType || schema(c).dataType == DateType
     }.map(c => Issue(id, "not_temporal", c))
-    (missing ++ badName ++ notNum ++ notTime).toList
-  }
-
-  /** Every input column a check reads — the validation list, and the
-    * column-pruning list the Runner caches (at the design scale the input
-    * rows are dominated by payload columns no check touches, e.g. `html`;
-    * caching them would evict the columns the checks DO scan — same
-    * principle as parquet ReadSchema pruning). */
-  def referencedColumns(check: Check): Seq[String] = check match {
-    case c: ColumnStatsCheck => c.column +: c.scope
-    case c: UniquenessCheck => c.keys ++ c.scope
-    case c: ReferentialCheck => c.column +: c.scope
-    case c: CategoricalConsistencyCheck =>
-      Seq(c.valueCol, c.groupCol) ++ c.scope ++ c.dateCol.toSeq
-    case c: DigitPreferenceCheck =>
-      Seq(c.column, c.groupCol) ++ c.scope ++ c.dateCol.toSeq
-    case c: GroupVarianceCheck =>
-      Seq(c.outcome, c.groupCol) ++ c.discCovariates ++ c.contCovariates ++ c.scope
-    case c: RegressionOutlierCheck =>
-      Seq(c.outcome, c.idCol) ++ c.discCovariates ++ c.contCovariates ++ c.scope
-    case c: LongitudinalOutlierCheck =>
-      Seq(c.outcome, c.idCol) ++ c.discCovariates ++ c.contCovariates ++
-        c.randomTerms ++ c.slopeVar.toSeq ++ c.scope
-    case c: UnPanelCheck =>
-      Seq(c.outcome, c.idCol) ++
-        (if (c.slotCol.nonEmpty) Seq(c.slotCol) else Nil) ++ c.dateCol.toSeq ++ c.scope
-    case c: DriftCheck => Seq(c.column, c.dateCol) ++ c.scope
-    case c: ByteIdentityCheck => Seq(c.keyCol, c.column)
-    case c: NearDupCheck => Seq(c.idCol, c.textCol)
-  }
-
-  /** Structural issues that make a check uncompilable (reference: hard
-    * %put ERROR + abort paths). */
-  def validate(schema: StructType, check: Check): List[Issue] = check match {
-    case c: ColumnStatsCheck =>
-      colIssues(schema, c.id, referencedColumns(c))
-    case c: UniquenessCheck =>
-      colIssues(schema, c.id, referencedColumns(c))
-    case c: ReferentialCheck =>
-      colIssues(schema, c.id, referencedColumns(c))
-    case c: CategoricalConsistencyCheck =>
-      colIssues(schema, c.id, referencedColumns(c), temporal = c.dateCol.toSeq)
-    case c: DigitPreferenceCheck =>
-      colIssues(schema, c.id, referencedColumns(c),
-        numeric = Seq(c.column), temporal = c.dateCol.toSeq)
-    case c: GroupVarianceCheck =>
-      colIssues(schema, c.id, referencedColumns(c),
-        numeric = c.outcome +: c.contCovariates)
-    case c: RegressionOutlierCheck =>
-      colIssues(schema, c.id, referencedColumns(c),
-        numeric = c.outcome +: c.contCovariates)
-    case c: LongitudinalOutlierCheck =>
-      colIssues(schema, c.id, referencedColumns(c),
-        numeric = (c.outcome +: c.contCovariates) ++ c.randomTerms ++ c.slopeVar.toSeq)
-    case c: UnPanelCheck =>
-      val slotIssue =
-        if (c.slotCol.isEmpty && c.dateCol.isEmpty)
-          List(Issue(c.id, "missing_slot", "need slotCol or dateCol"))
-        else Nil
-      slotIssue ++ colIssues(schema, c.id, referencedColumns(c),
-        numeric = Seq(c.outcome), temporal = c.dateCol.toSeq)
-    case c: DriftCheck =>
-      colIssues(schema, c.id, referencedColumns(c),
-        numeric = Seq(c.column), temporal = Seq(c.dateCol))
-    case c: ByteIdentityCheck =>
-      colIssues(schema, c.id, referencedColumns(c))
-    case c: NearDupCheck =>
-      colIssues(schema, c.id, referencedColumns(c))
+    slotIssue ++ missing ++ badName ++ notNum ++ notTime
   }
 
   /** Parameter defaulting with warnings — argumentCheck.sas semantics:
@@ -229,6 +171,11 @@ object CheckCompiler {
           out = out.copy(scope = Nil)
         }
         out
+      case c: ByteIdentityCheck if c.scope.nonEmpty =>
+        // one digest per key is a table-wide invariant: a scope would not
+        // change the verdict, only keep the check out of the KeyScan fusion
+        warn("defaulted_param", "scope not supported for byte identity (the invariant is table-wide) → global")
+        c.copy(scope = Nil)
       case other => other
     }
     (fixed, w.result())

@@ -1,17 +1,18 @@
 package graft.engine
 
 import graft.checks._
-import graft.operators._
 import graft.store.TableIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The check runner: compiles a suite of Checks against one input table
-  * into verdict + violation frames, fusing where profitable
-  * (SURVEY.md §4 loop-fusion note):
-  *  - all ColumnStatsChecks with the same scope → ONE sketch-agg pass;
-  *  - each other family is already a single-lineage plan;
-  *  - the input is cached once when ≥ 3 check families will scan it.
+  * into verdict + violation frames:
+  *  - the input is pruned to the suite's referenced columns and cached
+  *    once when the suite holds ≥ 3 checks;
+  *  - SharedScans builds the scans several checks share (ColumnStats
+  *    scope groups, the KeyScan pair, the CellScan group);
+  *  - each check builds its own outputs from the input and its slice of
+  *    the shared scans, on a small thread pool.
   *
   * `runResumable` adds the north-rule checkpoint/resume: the input is
   * processed per unit (a partition column value, e.g. warc_ts quarter);
@@ -51,16 +52,23 @@ object Runner {
           allowMissingColumns = true)
   }
 
-  def run(df: DataFrame, suite: Suite): RunResult = {
+  /** Size of the pool that builds the checks concurrently. */
+  private val BuildThreads = 8
+
+  def run(df: DataFrame, suite: Suite): RunResult = run(df, suite, BuildThreads)
+
+  /** `run` with the build pool sized `buildThreads` (1 builds in order on
+    * the calling thread). */
+  private[engine] def run(df: DataFrame, suite: Suite, buildThreads: Int): RunResult = {
     // collect (don't scope-release) the run's caches: the returned frames
     // are lazy, so they must stay cached until the caller materializes —
     // RunResult.release() is the explicit hand-off; an enclosing
     // CacheTracker.scope (runResumable) still frees them automatically
-    val (result, caches) = CacheTracker.collect(runBody(df, suite))
+    val (result, caches) = CacheTracker.collect(runBody(df, suite, buildThreads))
     result.copy(caches = caches)
   }
 
-  private def runBody(df: DataFrame, suite: Suite): RunResult = {
+  private def runBody(df: DataFrame, suite: Suite, buildThreads: Int): RunResult = {
     val spark = df.sparkSession
     // compile: schema validation + parameter defaulting (the reference's
     // %dataExist/%variableExist/%argumentCheck semantics) — structural
@@ -81,172 +89,45 @@ object Runner {
     // already cached the input, use it as-is: the in-memory columnar cache
     // serves per-pass column pruning at read time, and re-caching a pruned
     // copy would double the memory footprint.
-    val needed = (checks.flatMap(graft.compile.CheckCompiler.referencedColumns) :+
-      suite.keyCol).distinct.filter(df.columns.contains)
+    val needed = (checks.flatMap(_.referencedColumns) :+ suite.keyCol)
+      .distinct.filter(df.columns.contains)
     val pruned = if (needed.size == df.columns.length) df else df.select(needed.map(col): _*)
     val input =
       if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
       else if (shouldCache) CacheTracker.cached(pruned)
       else pruned
+    val shared = new SharedScans(input, checks, suite.refTables, suite.keyCol)
 
-    val colStats = checks.collect { case c: ColumnStatsCheck => c }
-    val statsResults: Seq[DataFrame] = colStats.groupBy(_.scope).toSeq.map {
-      case (_, cs) =>
-        val profiled = ColumnStats.profile(input, cs)
-        ColumnStats.verdicts(profiled, cs)
-    }
-
-    // Fuse uniqueness + byte-identity when they audit the same key: both
-    // first phases are a full-table groupBy(xxhash64(key)) — KeyScan runs
-    // it ONCE — and because divergent-digest buckets necessarily hold >1
-    // row, ONE fused phase 2 (semi-join + exact groupBy(key) emitting
-    // dup_count AND distinct-digest count) serves both checks' second
-    // phase too: 4 full input scans become 2.
-    val byteChecks = checks.collect { case c: ByteIdentityCheck => c }
-    // lazy: KeyScan.phase2's broadcast decision runs an eager full-table
-    // count — deferring construction moves that job into the parallel
-    // build pool below (first uniqueness/byte-identity thunk computes it,
-    // the sibling blocks on the lazy-val latch; all other checks overlap)
-    lazy val fused: Map[String, (UniquenessCheck, ByteIdentityCheck, DataFrame)] =
-      checks.collect {
-        case u: UniquenessCheck =>
-          byteChecks.collectFirst {
-            case b if b.scope.isEmpty && (u.scope ++ u.keys).distinct == Seq(b.keyCol) =>
-              val p1 = KeyScan.phase1(input, Seq(b.keyCol))
-              (u.id, (u, b, KeyScan.phase2(input, Seq(b.keyCol), b.column, p1)))
-          }
-      }.flatten.toMap
-    def uniqShared(c: UniquenessCheck): Option[DataFrame] =
-      fused.get(c.id).map { case (_, _, p2) => p2 }
-    def byteShared(c: ByteIdentityCheck): Option[DataFrame] =
-      fused.values.collectFirst { case (_, b, p2) if b.id == c.id => p2 }
-
-    // Fuse the count-based families (categorical / digit-preference /
-    // drift): each is a `filter → derive keys → groupBy.count` over the
-    // full input, so ≥2 of them become ONE CellScan pass + ONE shuffle.
-    // Drift's bin edges ride the scan base as broadcast columns.
-    val catChecks = checks.collect { case c: CategoricalConsistencyCheck => c }
-    val digChecks = checks.collect { case c: DigitPreferenceCheck => c }
-    val drChecks = checks.collect { case c: DriftCheck => c }
-    val cellPre: Map[String, DataFrame] =
-      if (catChecks.size + digChecks.size + drChecks.size < 2) Map.empty
-      else {
-        // ALL drift bin edges ride ONE broadcast 1-row frame (one
-        // agg(min,max per column) pass) instead of one full scan per check
-        var base = input
-        val drFams =
-          if (drChecks.isEmpty) Seq.empty
-          else {
-            val named = drChecks.zipWithIndex.map { case (c, i) =>
-              (c, s"__dr${i}_mn", s"__dr${i}_w")
-            }
-            base = base.crossJoin(broadcast(Drift.edgesMulti(input, named)))
-            named.map { case (c, mn, w) => c.id -> Drift.cellFamily(c, mn, w) }
-          }
-        val fams = catChecks.map(c => c.id -> CategoricalConsistency.cellFamily(c)) ++
-          digChecks.map(c => c.id -> DigitPreference.cellFamily(c)) ++ drFams
-        val counts = CellScan.counts(base, fams.map(_._2))
-        fams.zipWithIndex.map { case ((id, _), i) =>
-          id -> CellScan.slice(counts, i, fams.map(_._2))
-        }.toMap
-      }
-
-    // one (verdicts, violations) builder per check family. Several of the
-    // branches do EAGER driver-side work at construction time (the OLS
+    // Several checks do EAGER driver-side work while building (the OLS
     // Gram collects, the dedup candidate counts, the variance-component
-    // estimates) — at bench scale the full suite
-    // spent 19 s building sequentially vs 16 s executing the unified
-    // action. The builds are independent across checks, so they
-    // run on a small thread pool (guide §2.6: actions are only sequential
-    // because the driver calls them sequentially); results are collected
-    // in check order, so verdict/violation frame content and order are
-    // IDENTICAL to the sequential build. Worker-thread caches land in an
-    // isolated context and are re-homed into this thread's scope, keeping
-    // the scope/collect release discipline intact.
-    val buildCheck: PartialFunction[Check, (DataFrame, DataFrame)] = {
-      case c: UniquenessCheck =>
-        (Uniqueness.verdicts(input, c, shared = uniqShared(c)),
-          Uniqueness.violations(input, c, shared = uniqShared(c)))
-      case c: ReferentialCheck =>
-        val ref = suite.refTables.getOrElse(c.refTable,
-          throw new IllegalArgumentException(s"missing refTable ${c.refTable}"))
-        (Referential.verdicts(input, ref, c, suite.keyCol),
-          Referential.violations(input, ref, c, suite.keyCol))
-      // each reduced-frame family builds ONE cached kernel frame (one
-      // exchange above its cell counts) and derives both outputs from it
-      case c: CategoricalConsistencyCheck =>
-        CategoricalConsistency.outputs(input, c, cellPre.get(c.id))
-      case c: DigitPreferenceCheck =>
-        DigitPreference.outputs(input, c, cellPre.get(c.id))
-      // model families: build the (eager, Gram-collecting) tests/flagged
-      // lineage ONCE and derive both outputs from it — separate
-      // verdicts/violations calls would each re-run the driver-side OLS
-      // collect pass
-      case c: GroupVarianceCheck =>
-        val t = GroupVariance.tests(input, c)
-        (GroupVariance.verdictsFrom(t, c), GroupVariance.violationsFrom(t, c))
-      // the flagged frames are consumed by TWO branches of the unified
-      // action (verdict aggregation + violation filter); uncached, each
-      // branch re-ran the full row pass (scan + broadcast-joined residual
-      // arithmetic). Cache them PRUNED to the columns both outputs read —
-      // row-proportional but narrow, MEMORY_AND_DISK spills at scale (the
-      // reference materializes its residual datasets the same way).
-      case c: RegressionOutlierCheck =>
-        val cols = (Seq("__key", c.idCol, c.outcome, "rstudent", "cookd",
-          "rstudent_cutoff", "flag_rstudent", "flag_cookd", "flag_outlier")).distinct
-        val f = CacheTracker.cached(
-          RegressionOutlier.flagged(input, c).select(cols.map(col): _*))
-        (RegressionOutlier.verdictsFrom(f, c), RegressionOutlier.violationsFrom(f, c))
-      case c: LongitudinalOutlierCheck =>
-        val cols = (Seq("__key", c.idCol, c.outcome, "rscaled", "cutoff",
-          "flag_outlier")).distinct
-        val f = CacheTracker.cached(
-          LongitudinalOutlier.flagged(input, c).select(cols.map(col): _*))
-        (LongitudinalOutlier.verdictsFrom(f, c), LongitudinalOutlier.violationsFrom(f, c))
-      // type=UN panel outliers: the scored frame is built ONCE and cached —
-      // one row per (scope, subject) — so verdicts and violations share
-      // the lineage instead of re-running the panel
-      case c: UnPanelCheck =>
-        val (dfp, cfg) = UnPanelOutlier.prepared(input, c)
-        val sc = CacheTracker.cached(UnPanelOutlier.scored(dfp, cfg))
-        (UnPanelOutlier.verdictsFrom(sc, cfg), UnPanelOutlier.violationsFrom(sc, cfg))
-      case c: DriftCheck =>
-        val t = Drift.tests(input, c, cellPre.get(c.id))
-        (Drift.verdictsFrom(t, c), Drift.violationsFrom(t, c))
-      case c: ByteIdentityCheck =>
-        (ByteIdentity.verdicts(input, c, shared = byteShared(c)),
-          ByteIdentity.violations(input, c, shared = byteShared(c)))
-      // LLM-pipeline dedup as a first-class check: ONE narrow signature
-      // pass (cached inside nearDupSurfaces) + a cached tiny drop frame
-      // shared by both outputs
-      case c: NearDupCheck =>
-        val (sig, drops0, capStats) = Dedup.nearDupSurfaces(input, c.idCol,
-          c.textCol, c.maxHamming, c.maxBucket)
-        val drops = CacheTracker.cached(drops0)
-        (Dedup.nearDupVerdictsFrom(sig, drops, capStats, c),
-          Dedup.nearDupViolationsFrom(drops, c))
-    }
-
+    // estimates) — at bench scale the full suite spent 19 s building
+    // sequentially vs 16 s executing the unified action. The builds are
+    // independent across checks, so they run on a small thread pool
+    // (guide §2.6: actions are only sequential because the driver calls
+    // them sequentially); results are collected in check order, so
+    // verdict/violation frame content and order are IDENTICAL to the
+    // sequential build. Worker-thread caches land in an isolated context
+    // and are re-homed into this thread's scope, keeping the scope/collect
+    // release discipline intact.
     // (Eagerly materializing each check's output frames inside the pool —
     // so the unified action reads only caches — was A/B'd and is NEUTRAL:
     // at bench scale the suite is bound by the box's memory bus across the
     // ~12 concurrent full-table passes, not by the unified action's
     // driver-side stage latency. Kept out for the simpler lazy contract.)
-    val buildThreads = spark.conf.get("spark.graft.build.threads", "8").toInt
-    val buildable = checks.filter(buildCheck.isDefinedAt)
-    val others: Seq[(DataFrame, DataFrame)] =
-      if (buildThreads <= 1 || buildable.size <= 1) buildable.map(buildCheck)
+    def build(c: Check) = c.outputs(input, shared)
+    val built: Seq[Option[(DataFrame, DataFrame)]] =
+      if (buildThreads <= 1 || checks.size <= 1) checks.map(build)
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(buildThreads, buildable.size))
+          math.min(buildThreads, checks.size))
         // one frame sink per build, filled as the build caches — so the
         // caches of a build that throws, and of siblings still running or
         // already finished, are all re-homed into this thread's scope
-        val sinks = buildable.map(_ => new scala.collection.mutable.ListBuffer[DataFrame])
+        val sinks = checks.map(_ => new scala.collection.mutable.ListBuffer[DataFrame])
         try {
           val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          val fs = buildable.zip(sinks).map { case (c, sink) =>
-            scala.concurrent.Future(CacheTracker.isolated(sink)(buildCheck(c)))(ec)
+          val fs = checks.zip(sinks).map { case (c, sink) =>
+            scala.concurrent.Future(CacheTracker.isolated(sink)(build(c)))(ec)
           }
           fs.map(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
         } catch {
@@ -261,8 +142,9 @@ object Runner {
           sinks.foreach(CacheTracker.registerAll)
         }
       }
+    val others = built.flatten
 
-    val verdicts = (statsResults ++ others.map(_._1))
+    val verdicts = (shared.columnStats ++ others.map(_._1))
       .reduceOption(_ unionByName _).getOrElse(Results.emptyVerdicts(spark))
     val violations = others.map(_._2)
       .reduceOption(_ unionByName _).getOrElse(Results.emptyViolations(spark))

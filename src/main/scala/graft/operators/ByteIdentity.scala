@@ -9,7 +9,13 @@ import org.apache.spark.sql.functions._
   * rewrites `text`; this check proves it by asserting one payload digest
   * per key.
   *
-  * Two-phase like Uniqueness: phase 1 groups by xxhash64(key) and detects
+  * In a suite that also checks the same key's uniqueness, both checks
+  * read the fused KeyScan (SharedScans): a key whose payloads diverge has
+  * >1 row, so its bucket is among phase 1's `count > 1` candidates, and
+  * ONE fused phase 2 counts each candidate key's distinct sha2-256
+  * digests beside its row count.
+  *
+  * Alone, it runs two phases like Uniqueness: phase 1 groups by xxhash64(key) and detects
   * candidate buckets via min≠max of a 64-bit payload digest (min≠max ⟺
   * >1 distinct value — a single-level aggregation, no count-distinct
   * expand; the shuffle carries 16 bytes per distinct key). Phase 2
@@ -66,6 +72,11 @@ object ByteIdentity {
       (col("bad_keys") === 0).as("pass"))
     Results.toVerdicts(framed, check.id, check.severity)
   }
+
+  /** (verdicts, violations) — the Runner's entry. */
+  def outputs(df: DataFrame, check: ByteIdentityCheck,
+      shared: Option[DataFrame]): (DataFrame, DataFrame) =
+    (verdicts(df, check, shared), violations(df, check, shared = shared))
 
   def violations(df: DataFrame, check: ByteIdentityCheck, limit: Int = 10000,
       shared: Option[DataFrame] = None): DataFrame = {

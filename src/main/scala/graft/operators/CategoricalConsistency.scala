@@ -333,42 +333,22 @@ object CategoricalConsistency {
     * entry. holmPooled (with pairwise) reads the reference's exact pooled
     * multtest family (:435-466); otherwise each surface is adjusted within
     * its own family. */
-  private[graft] def outputs(df: DataFrame, check: CategoricalConsistencyCheck,
-      pre: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+  def outputs(df: DataFrame, check: CategoricalConsistencyCheck,
+      pre: Option[DataFrame]): (DataFrame, DataFrame) = {
     val k = kernel(df, check, pre, check.pairwise)
     val p = if (check.pairwise && check.holmPooled) "p_pool" else "p_holm"
     val ovr = ovrRows(k, check, p)
-    (verdictRows(ovr, k, if (check.pairwise) Some(pairRows(k, check, p)) else None, check),
+    val pairs = if (check.pairwise) Seq(pairVerdicts(pairRows(k, check, p), check)) else Nil
+    (Results.toVerdicts((Seq(framedVerdicts(ovr, check), overallVerdicts(k, check)) ++ pairs)
+      .reduce(_ unionByName _), check.id, check.severity),
       violationRows(ovr.filter(col("p_holm") < check.alphaBar), check))
   }
 
-  private def verdictRows(t: DataFrame, k: DataFrame, pairT: Option[DataFrame],
-      check: CategoricalConsistencyCheck): DataFrame =
-    Results.toVerdicts((Seq(framedVerdicts(t, check), overallVerdicts(k, check)) ++
-      pairT.map(pairVerdicts(_, check))).reduce(_ unionByName _), check.id, check.severity)
-
   def verdicts(df: DataFrame, check: CategoricalConsistencyCheck,
       pre: Option[DataFrame] = None): DataFrame = outputs(df, check, pre)._1
-
-  /** Verdicts from prebuilt one-vs-rest / pairwise test frames. */
-  def verdictsFrom(t: DataFrame, pairT: Option[DataFrame], df: DataFrame,
-      check: CategoricalConsistencyCheck,
-      pre: Option[DataFrame] = None): DataFrame =
-    verdictRows(t, kernel(df, check, pre, check.pairwise), pairT, check)
 
   /** Violation rows: for every failing (panel, grp), its worst-deviating
     * category with observed vs expected row-percent. */
   def violations(df: DataFrame, check: CategoricalConsistencyCheck,
       pre: Option[DataFrame] = None): DataFrame = outputs(df, check, pre)._2
-
-  /** Violations for the failing rows of a prebuilt test frame `base`. */
-  def violationsFrom(base: DataFrame, df: DataFrame,
-      check: CategoricalConsistencyCheck,
-      pre: Option[DataFrame] = None): DataFrame = {
-    val keys = check.scope :+ "panel" :+ "grp"
-    val failing = base.filter(col("p_holm") < check.alphaBar)
-      .select(keys.map(col) :+ col("p_holm"): _*)
-    val worst = ovrRows(kernel(df, check, pre, check.pairwise), check, "p_holm").drop("p_holm")
-    violationRows(NullSafeJoin(worst, broadcast(failing), keys), check)
-  }
 }

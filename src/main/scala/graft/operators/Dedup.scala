@@ -299,6 +299,15 @@ object Dedup {
       .trackedCache()
   }
 
+  /** NearDupCheck (verdicts, violations): both ride ONE narrow signature
+    * pass (cached inside nearDupSurfaces) and ONE cached tiny drop frame. */
+  def outputs(df: DataFrame, check: NearDupCheck): (DataFrame, DataFrame) = {
+    val (sig, drops0, capStats) = nearDupSurfaces(df, check.idCol, check.textCol,
+      check.maxHamming, check.maxBucket)
+    val drops = drops0.trackedCache()
+    (nearDupVerdictsFrom(sig, drops, capStats, check), nearDupViolationsFrom(drops, check))
+  }
+
   /** NearDupCheck verdicts: TWO rows, both riding the cached surfaces (no
     * input re-scan) —
     *  - `dup_fraction`: drop fraction vs maxDupFrac;

@@ -159,8 +159,8 @@ object DigitPreference {
     testRows(kernel(df, check, pre), check).drop("top_digit", "top_cnt")
 
   /** (verdicts, violations) from ONE cached kernel frame. */
-  private[graft] def outputs(df: DataFrame, check: DigitPreferenceCheck,
-      pre: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+  def outputs(df: DataFrame, check: DigitPreferenceCheck,
+      pre: Option[DataFrame]): (DataFrame, DataFrame) = {
     val t = testRows(kernel(df, check, pre), check)
     (verdictsFrom(t, check), violationRows(t.filter(!col("pass")), check))
   }
@@ -193,17 +193,6 @@ object DigitPreference {
   /** Violations: failing groups with their most-preferred digit. */
   def violations(df: DataFrame, check: DigitPreferenceCheck,
       pre: Option[DataFrame] = None): DataFrame = outputs(df, check, pre)._2
-
-  /** Violations for the failing rows of a prebuilt `tests` frame `t`. */
-  def violationsFrom(t: DataFrame, df: DataFrame, check: DigitPreferenceCheck,
-      pre: Option[DataFrame] = None): DataFrame = {
-    val keyCols = check.scope :+ "panel" :+ "grp"
-    val failing = t.filter(!col("pass"))
-      .select((keyCols.map(col) :+ col("gof_p") :+ col("none_pct")): _*)
-    val top = testRows(kernel(df, check, pre), check)
-      .select((keyCols :+ "top_digit" :+ "top_cnt").map(col): _*)
-    violationRows(NullSafeJoin(top, broadcast(failing), keyCols), check)
-  }
 
   private def violationRows(v: DataFrame, check: DigitPreferenceCheck): DataFrame =
     Results.toViolations(v.select(

@@ -21,29 +21,16 @@ import org.apache.spark.sql.functions._
   */
 object Drift {
 
-  /** One-row bin-edge frame (min + bin width), named by the caller so
-    * several drift checks can ride one adorned scan base. Lazy — meant to
-    * be crossJoin(broadcast(_))-ed, never collected (a driver collect here
-    * would run a blocking full scan at plan-build time, twice per suite
-    * run: verdicts + violations construct separate plans). */
-  def edges(df: DataFrame, check: DriftCheck,
-      mnName: String = "__mn", wName: String = "__w"): DataFrame = {
-    val v = col(check.column).cast("double")
-    df.filter(v.isNotNull && !isnan(v))
-      .agg(min(v).as(mnName), max(v).as("__mx"))
-      .select(col(mnName),
-        when(col("__mx") > col(mnName), (col("__mx") - col(mnName)) / check.bins)
-          .otherwise(1.0).as(wName))
-  }
-
-  /** All drift checks' bin edges in ONE pass: a single agg(min,max per
-    * column) over the input instead of one full scan per check — with d
-    * drift checks in a suite, d + 1 scans become 2 (this + the fused
-    * CellScan). Per-column null/NaN exclusion is folded into the aggregate
-    * (min/max skip nulls; NaN is mapped to null so it can't poison max,
-    * which in Spark's ordering treats NaN as the largest double). Returns
-    * ONE 1-row frame with (mnName, wName) per check, meant to be
-    * crossJoin(broadcast(_))-ed onto the shared scan base. */
+  /** Drift checks' bin edges (min + bin width per check) in ONE pass: a
+    * single agg(min,max per column) over the input instead of one full
+    * scan per check — with d drift checks in a suite, d + 1 scans become 2
+    * (this + the fused CellScan). Per-column null/NaN exclusion is folded
+    * into the aggregate (min/max skip nulls; NaN is mapped to null so it
+    * can't poison max, which in Spark's ordering treats NaN as the largest
+    * double). Returns ONE 1-row frame with (mnName, wName) per check, named
+    * by the caller so several checks ride one adorned scan base. Lazy —
+    * meant to be crossJoin(broadcast(_))-ed, never collected (a driver
+    * collect here would run a blocking full scan at plan-build time). */
   def edgesMulti(df: DataFrame,
       checks: Seq[(DriftCheck, String, String)]): DataFrame = {
     val aggs = checks.zipWithIndex.flatMap { case ((c, mnName, _), i) =>
@@ -66,7 +53,7 @@ object Drift {
 
   /** This check's slice of the fused multi-family cell scan (CellScan).
     * The scan base must carry this check's broadcast edge columns
-    * (crossJoin(broadcast(edges(df, check, mnName, wName)))). */
+    * (crossJoin(broadcast(edgesMulti(df, Seq((check, mnName, wName)))))). */
   def cellFamily(check: DriftCheck, mnName: String, wName: String): CellScan.Family = {
     val v = col(check.column).cast("double")
     CellScan.Family(
@@ -84,7 +71,7 @@ object Drift {
     pre.getOrElse {
       val v = col(check.column).cast("double")
       df.filter(v.isNotNull && !isnan(v))
-        .crossJoin(broadcast(edges(df, check)))
+        .crossJoin(broadcast(edgesMulti(df, Seq((check, "__mn", "__w")))))
         .withColumn("panel", PanelBins.panelCode(col(check.dateCol), check.interval))
         .withColumn("bin", binExpr(check, v, col("__mn"), col("__w")))
         .groupBy((check.scope :+ "panel" :+ "bin").map(col): _*)
@@ -173,12 +160,18 @@ object Drift {
       .withColumn("flag_ks", col("ks") > check.ksThreshold)
       .withColumn("pass", !(col("flag_chisq") || col("flag_ks")))
 
+  /** (verdicts, violations) from ONE cached kernel frame. */
+  def outputs(df: DataFrame, check: DriftCheck,
+      pre: Option[DataFrame]): (DataFrame, DataFrame) = {
+    val t = tests(df, check, pre)
+    (verdictsFrom(t, check), violationsFrom(t, check))
+  }
+
   def verdicts(df: DataFrame, check: DriftCheck,
       pre: Option[DataFrame] = None): DataFrame =
     verdictsFrom(tests(df, check, pre), check)
 
-  /** Verdicts from a prebuilt `tests` frame — lets the Runner build the
-    * tests lineage ONCE for both outputs. */
+  /** Verdicts from a prebuilt `tests` frame. */
   def verdictsFrom(t: DataFrame, check: DriftCheck): DataFrame = {
     val framed = t.select(
       concat_ws("/",

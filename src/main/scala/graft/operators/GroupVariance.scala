@@ -192,11 +192,17 @@ object GroupVariance {
     brownForsythe(grpSums).trackedCache()
   }
 
+  /** (verdicts, violations) from ONE build of the (eager, Gram-collecting)
+    * tests lineage. */
+  def outputs(df: DataFrame, check: GroupVarianceCheck): (DataFrame, DataFrame) = {
+    val t = tests(df, check)
+    (verdictsFrom(t, check), violationsFrom(t, check))
+  }
+
   def verdicts(df: DataFrame, check: GroupVarianceCheck): DataFrame =
     verdictsFrom(tests(df, check), check)
 
-  /** Verdicts from a prebuilt `tests` frame — lets the Runner build the
-    * (eager, Gram-collecting) tests lineage ONCE for both outputs. */
+  /** Verdicts from a prebuilt `tests` frame. */
   def verdictsFrom(t: DataFrame, check: GroupVarianceCheck): DataFrame = {
     val framed = t.select(
       concat_ws("/", col("__key"), concat(lit("grp="), col("cmp"))).as("partition"),

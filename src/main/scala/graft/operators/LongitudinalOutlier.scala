@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.CacheTracker.TrackedCacheOps
 import graft.checks.{LongitudinalOutlierCheck, Results}
 import graft.stats.{Distributions, VarComp}
 import org.apache.spark.sql.DataFrame
@@ -225,11 +226,19 @@ object LongitudinalOutlier {
     }.toDF("partition", "beta_ols", "beta_gls", "sigma_b2", "sigma_e2", "n_rows")
   }
 
+  /** (verdicts, violations) — the Runner's entry; the flagged frame is
+    * built and cached as in RegressionOutlier.outputs. */
+  def outputs(df: DataFrame, check: LongitudinalOutlierCheck): (DataFrame, DataFrame) = {
+    val cols = Seq("__key", check.idCol, check.outcome, "rscaled", "cutoff",
+      "flag_outlier").distinct
+    val f = flagged(df, check).select(cols.map(col): _*).trackedCache()
+    (verdictsFrom(f, check), violationsFrom(f, check))
+  }
+
   def verdicts(df: DataFrame, check: LongitudinalOutlierCheck): DataFrame =
     verdictsFrom(flagged(df, check), check)
 
-  /** Verdicts from a prebuilt `flagged` frame — lets the Runner build the
-    * (eager, Gram-collecting) flagged lineage ONCE for both outputs. */
+  /** Verdicts from a prebuilt `flagged` frame. */
   def verdictsFrom(f: DataFrame, check: LongitudinalOutlierCheck): DataFrame = {
     val framed = f.groupBy(col("__key")).agg(
       sum(when(col("flag_outlier"), 1L).otherwise(0L)).as("n_outliers"),

@@ -46,6 +46,11 @@ object Referential {
     Results.toVerdicts(framed, check.id, check.severity)
   }
 
+  /** (verdicts, violations) — the Runner's entry. */
+  def outputs(df: DataFrame, ref: DataFrame, check: ReferentialCheck,
+      keyCol: String): (DataFrame, DataFrame) =
+    (verdicts(df, ref, check, keyCol), violations(df, ref, check, keyCol))
+
   def violations(df: DataFrame, ref: DataFrame, check: ReferentialCheck,
       keyCol: String, limit: Int = 10000, broadcastDim: Boolean = true): DataFrame = {
     val v = orphans(df, ref, check, keyCol, broadcastDim).limit(limit).select(

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.CacheTracker.TrackedCacheOps
 import graft.checks.{RegressionOutlierCheck, Results}
 import graft.stats.Distributions
 import org.apache.spark.sql.DataFrame
@@ -52,11 +53,23 @@ object RegressionOutlier {
     out.drop("__fit_n")
   }
 
+  /** (verdicts, violations) — the Runner's entry. The flagged frame is
+    * built ONCE (its Gram collect is eager) and cached PRUNED to the
+    * columns both outputs read: uncached, each output's branch of the
+    * unified action re-ran the full row pass. Row-proportional but narrow;
+    * MEMORY_AND_DISK spills at scale (the reference materializes its
+    * residual datasets the same way). */
+  def outputs(df: DataFrame, check: RegressionOutlierCheck): (DataFrame, DataFrame) = {
+    val cols = Seq("__key", check.idCol, check.outcome, "rstudent", "cookd",
+      "rstudent_cutoff", "flag_rstudent", "flag_cookd", "flag_outlier").distinct
+    val f = flagged(df, check).select(cols.map(col): _*).trackedCache()
+    (verdictsFrom(f, check), violationsFrom(f, check))
+  }
+
   def verdicts(df: DataFrame, check: RegressionOutlierCheck): DataFrame =
     verdictsFrom(flagged(df, check), check)
 
-  /** Verdicts from a prebuilt `flagged` frame — lets the Runner build the
-    * (eager, Gram-collecting) flagged lineage ONCE for both outputs. */
+  /** Verdicts from a prebuilt `flagged` frame. */
   def verdictsFrom(f: DataFrame, check: RegressionOutlierCheck): DataFrame = {
     val framed = f.groupBy(col("__key")).agg(
       sum(when(col("flag_outlier"), 1L).otherwise(0L)).as("n_outliers"),

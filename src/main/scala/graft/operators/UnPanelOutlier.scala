@@ -52,10 +52,9 @@ object UnPanelOutlier {
       cutoffPct: Double = 99.0,
       severity: String = "warning")
 
-  /** First-class check → (input with slot column, operator config) — the
-    * Runner's entry point. A dateCol-form check derives its slot as a
-    * calendar bin here (narrow projection, no shuffle); a slotCol-form
-    * check passes through. */
+  /** First-class check → (input with slot column, operator config). A
+    * dateCol-form check derives its slot as a calendar bin here (narrow
+    * projection, no shuffle); a slotCol-form check passes through. */
   def prepared(df: DataFrame, c: graft.checks.UnPanelCheck): (DataFrame, Config) =
     c.dateCol match {
       case Some(d) =>
@@ -122,12 +121,18 @@ object UnPanelOutlier {
     }
   }
 
+  /** (verdicts, violations) of a first-class check from ONE cached scored
+    * frame (one row per (scope, subject)). */
+  def outputs(df: DataFrame, check: graft.checks.UnPanelCheck): (DataFrame, DataFrame) = {
+    val (dfp, cfg) = prepared(df, check)
+    val sc = scored(dfp, cfg).trackedCache()
+    (verdictsFrom(sc, cfg), violationsFrom(sc, cfg))
+  }
+
   def verdicts(df: DataFrame, cfg: Config): DataFrame =
     verdictsFrom(scored(df, cfg), cfg)
 
-  /** Verdicts from a prebuilt `scored` frame — lets the Runner (and any
-    * caller that needs both outputs) build and cache the scored lineage
-    * ONCE, matching the sibling operators' `verdictsFrom` shape. */
+  /** Verdicts from a prebuilt `scored` frame. */
   def verdictsFrom(sc: DataFrame, cfg: Config): DataFrame = {
     val framed = sc.groupBy(col("__key")).agg(
       sum(when(col("flag_outlier"), 1L).otherwise(0L)).as("n_outliers"),

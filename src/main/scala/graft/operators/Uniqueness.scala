@@ -76,6 +76,11 @@ object Uniqueness {
     Results.toVerdicts(framed, check.id, check.severity)
   }
 
+  /** (verdicts, violations) — the Runner's entry. */
+  def outputs(df: DataFrame, check: UniquenessCheck,
+      shared: Option[DataFrame]): (DataFrame, DataFrame) =
+    (verdicts(df, check, shared), violations(df, check, shared = shared))
+
   def violations(df: DataFrame, check: UniquenessCheck, limit: Int = 10000,
       shared: Option[DataFrame] = None): DataFrame = {
     val v = duplicateKeys(df, check, shared).limit(limit).select(

@@ -80,7 +80,7 @@ class PlanSpec extends SparkSpec {
     // fused values ≡ the per-check single-column aggregation
     val row = fusedEdges.collect()(0)
     for (((c, mn, w), _) <- named.zipWithIndex) {
-      val e = graft.operators.Drift.edges(pages, c).collect()(0)
+      val e = graft.operators.Drift.edgesMulti(pages, Seq((c, "__mn", "__w"))).collect()(0)
       assert(math.abs(row.getAs[Double](mn) - e.getDouble(0)) < 1e-12, mn)
       assert(math.abs(row.getAs[Double](w) - e.getDouble(1)) < 1e-12, w)
     }
@@ -452,7 +452,7 @@ class PlanSpec extends SparkSpec {
       val fams = Seq(CategoricalConsistency.cellFamily(cat), DigitPreference.cellFamily(dig),
         Drift.cellFamily(dr, "__dr0_mn", "__dr0_w"))
       val counts = CellScan.counts(
-        pages.crossJoin(broadcast(Drift.edges(pages, dr, "__dr0_mn", "__dr0_w"))), fams)
+        pages.crossJoin(broadcast(Drift.edgesMulti(pages, Seq((dr, "__dr0_mn", "__dr0_w"))))), fams)
       val pre = fams.indices.map(i => Some(CellScan.slice(counts, i, fams)))
       // each tail: exactly one exchange above the cached counts (planned
       // before the kernel frames are cached, which would substitute them)
@@ -477,7 +477,7 @@ class PlanSpec extends SparkSpec {
       val outs = Seq(
         CategoricalConsistency.outputs(pages, cat, pre(0)),
         DigitPreference.outputs(pages, dig, pre(1)),
-        { val t = Drift.tests(pages, dr, pre(2)); (Drift.verdictsFrom(t, dr), Drift.violationsFrom(t, dr)) })
+        Drift.outputs(pages, dr, pre(2)))
       for (((v, x), name) <- outs.zip(Seq("categorical", "digit", "drift")); o <- Seq(v, x))
         assert(shape(o) == (0, false), s"$name outputs must only project the cached kernel frame")
       perGrp.unpersist(); grpSums.unpersist()

@@ -90,7 +90,7 @@ class CheckCompilerSpec extends SparkSpec {
       ByteIdentityCheck("bi", "id", "grp"),
       NearDupCheck("nd", idCol = "id", textCol = "grp"))
     checks.foreach { c =>
-      val refd = CheckCompiler.referencedColumns(c).toSet
+      val refd = c.referencedColumns.toSet
       val declared: Set[String] = c match {
         case x: ColumnStatsCheck => Set(x.column) ++ x.scope
         case x: UniquenessCheck => x.keys.toSet ++ x.scope
@@ -123,6 +123,15 @@ class CheckCompilerSpec extends SparkSpec {
     val (_, w2) = CheckCompiler.compile(df, Seq(
       NearDupCheck("nd2", idCol = "id", textCol = "grp", maxHamming = 0)))
     assert(w2.isEmpty, "maxHamming=0 (exact-only) is a valid configuration")
+  }
+
+  test("a scoped byte-identity check normalizes to global with a warning") {
+    val (fixed, warnings) = CheckCompiler.compile(df, Seq(
+      ByteIdentityCheck("bi", "id", "grp", scope = Seq("v"))))
+    assert(fixed == Seq(ByteIdentityCheck("bi", "id", "grp")))
+    assert(warnings.map(w => (w.checkId, w.kind)) == List(("bi", "defaulted_param")))
+    val (_, w2) = CheckCompiler.compile(df, Seq(ByteIdentityCheck("bi2", "id", "grp")))
+    assert(w2.isEmpty)
   }
 
   test("valid suite compiles unchanged with no warnings") {

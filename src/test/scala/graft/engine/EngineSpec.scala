@@ -295,18 +295,15 @@ class EngineSpec extends SparkSpec {
       canon(df.filter(col("metric") =!= "q0.5"))
     def med(df: org.apache.spark.sql.DataFrame): Double =
       df.filter(col("metric") === "q0.5").select("stat").collect()(0).getDouble(0)
-    def runWith(threads: String) = {
-      spark.conf.set("spark.graft.build.threads", threads)
-      try {
-        val res = Runner.run(input, suite)
-        val out = (canonV(res.verdicts), med(res.verdicts), canon(res.violations))
-        res.release()
-        out
-      } finally spark.conf.unset("spark.graft.build.threads")
+    def runWith(threads: Int) = {
+      val res = Runner.run(input, suite, threads)
+      val out = (canonV(res.verdicts), med(res.verdicts), canon(res.violations))
+      res.release()
+      out
     }
     spark.catalog.clearCache()
-    val seq = runWith("1")
-    val par = runWith("8")
+    val seq = runWith(1)
+    val par = runWith(8)
     assert(seq._1 == par._1, "verdicts must be identical under parallel build")
     assert(math.abs(seq._2 - par._2) < 2.0, "q0.5 within KLL tolerance")
     assert(seq._3 == par._3, "violations must be identical under parallel build")

@@ -63,4 +63,22 @@ class InputReadsSpec extends SparkSpec {
     assert(fullReads(flagship("lang_consistency", "score_digits", "score_drift")) == 2)
     assert(fullReads(Flagship.suite(spark).checks) == 16)
   }
+
+  test("a scoped byte-identity check runs as the global one: same verdicts, still fused") {
+    val global = flagship("unique_url", "text_bytes")
+    val scoped = global.map {
+      case b: ByteIdentityCheck => b.copy(scope = Seq("lang"))
+      case c => c
+    }
+    assert(fullReads(scoped) == 2, "the scoped byte check must share the KeyScan")
+    def verdicts(checks: Seq[Check]): Seq[String] = {
+      val res = Runner.run(pages, Flagship.suiteOf(spark, checks))
+      val out = res.verdicts.collect().map(_.toString).sorted.toSeq
+      res.release()
+      out
+    }
+    val v = verdicts(global)
+    assert(v.exists(_.contains("text_bytes")), "vacuous comparison")
+    assert(verdicts(scoped) == v)
+  }
 }

@@ -20,16 +20,12 @@ class CellScanSpec extends SparkSpec {
     groupCol = "host_id", alpha = 1e-4, minNum = 50)
   private val dr = DriftCheck("score_drift", "score", "warc_ts", interval = "quarter", alpha = 0.001)
 
+  /** The Runner's fused slices, from its own shared scans. */
   private def fusedSlices(df: DataFrame): Map[String, DataFrame] = {
-    val base = df.crossJoin(broadcast(Drift.edges(df, dr, "__dr0_mn", "__dr0_w")))
-    val fams = Seq(
-      "cat" -> CategoricalConsistency.cellFamily(cat),
-      "dig" -> DigitPreference.cellFamily(dig),
-      "dr" -> Drift.cellFamily(dr, "__dr0_mn", "__dr0_w"))
-    val counts = CellScan.counts(base, fams.map(_._2))
-    fams.zipWithIndex.map { case ((id, _), i) =>
-      id -> CellScan.slice(counts, i, fams.map(_._2))
-    }.toMap
+    val shared = new graft.engine.SharedScans(df, Seq(cat, dig, dr), Map.empty, "url")
+    Map("cat" -> cat.id, "dig" -> dig.id, "dr" -> dr.id).map { case (k, id) =>
+      k -> shared.cells(id).get
+    }
   }
 
   private def assertSameRows(a: DataFrame, b: DataFrame, what: String): Unit = {

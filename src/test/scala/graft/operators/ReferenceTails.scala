@@ -536,7 +536,7 @@ object DriftRef {
     val keyCols = check.scope :+ "panel"
     val counts = pre.getOrElse {
       val base0 = df.filter(v.isNotNull && !isnan(v))
-      val e = Drift.edges(df, check)
+      val e = Drift.edgesMulti(df, Seq((check, "__mn", "__w")))
       base0
         .crossJoin(broadcast(e))
         .withColumn("panel", PanelBins.panelCode(col(check.dateCol), check.interval))
