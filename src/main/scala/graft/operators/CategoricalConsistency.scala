@@ -329,10 +329,11 @@ object CategoricalConsistency {
       concat(lit("inconsistent "), lit(check.valueCol), lit(" distribution, p_holm="),
         round(col("p_holm"), 6).cast("string")).as("label")), check.id)
 
-  /** (verdicts, violations) from ONE cached kernel frame — the Runner's
-    * entry. holmPooled (with pairwise) reads the reference's exact pooled
-    * multtest family (:435-466); otherwise each surface is adjusted within
-    * its own family. */
+  /** (verdicts, violations) from ONE cached kernel frame; a violation is
+    * a failing (panel, grp) with its worst-deviating category, observed vs
+    * expected row-percent. holmPooled (with pairwise) reads the reference's
+    * exact pooled multtest family (:435-466); otherwise each surface is
+    * adjusted within its own family. */
   def outputs(df: DataFrame, check: CategoricalConsistencyCheck,
       pre: Option[DataFrame]): (DataFrame, DataFrame) = {
     val k = kernel(df, check, pre, check.pairwise)
@@ -343,12 +344,4 @@ object CategoricalConsistency {
       .reduce(_ unionByName _), check.id, check.severity),
       violationRows(ovr.filter(col("p_holm") < check.alphaBar), check))
   }
-
-  def verdicts(df: DataFrame, check: CategoricalConsistencyCheck,
-      pre: Option[DataFrame] = None): DataFrame = outputs(df, check, pre)._1
-
-  /** Violation rows: for every failing (panel, grp), its worst-deviating
-    * category with observed vs expected row-percent. */
-  def violations(df: DataFrame, check: CategoricalConsistencyCheck,
-      pre: Option[DataFrame] = None): DataFrame = outputs(df, check, pre)._2
 }

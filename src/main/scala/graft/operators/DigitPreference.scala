@@ -158,15 +158,13 @@ object DigitPreference {
       pre: Option[DataFrame] = None): DataFrame =
     testRows(kernel(df, check, pre), check).drop("top_digit", "top_cnt")
 
-  /** (verdicts, violations) from ONE cached kernel frame. */
+  /** (verdicts, violations) from ONE cached kernel frame; a violation is a
+    * failing group with its most-preferred digit. */
   def outputs(df: DataFrame, check: DigitPreferenceCheck,
       pre: Option[DataFrame]): (DataFrame, DataFrame) = {
     val t = testRows(kernel(df, check, pre), check)
     (verdictsFrom(t, check), violationRows(t.filter(!col("pass")), check))
   }
-
-  def verdicts(df: DataFrame, check: DigitPreferenceCheck,
-      pre: Option[DataFrame] = None): DataFrame = outputs(df, check, pre)._1
 
   /** Verdicts from a prebuilt `tests` frame. */
   def verdictsFrom(t: DataFrame, check: DigitPreferenceCheck): DataFrame = {
@@ -189,10 +187,6 @@ object DigitPreference {
       (check.scope.map(s => concat_ws("=", lit(s), col(s).cast("string"))) ++
         Seq(concat(lit("panel="), col("panel")),
           concat(lit("grp="), col("grp")))): _*).as("partition")
-
-  /** Violations: failing groups with their most-preferred digit. */
-  def violations(df: DataFrame, check: DigitPreferenceCheck,
-      pre: Option[DataFrame] = None): DataFrame = outputs(df, check, pre)._2
 
   private def violationRows(v: DataFrame, check: DigitPreferenceCheck): DataFrame =
     Results.toViolations(v.select(

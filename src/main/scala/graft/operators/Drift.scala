@@ -167,10 +167,6 @@ object Drift {
     (verdictsFrom(t, check), violationsFrom(t, check))
   }
 
-  def verdicts(df: DataFrame, check: DriftCheck,
-      pre: Option[DataFrame] = None): DataFrame =
-    verdictsFrom(tests(df, check, pre), check)
-
   /** Verdicts from a prebuilt `tests` frame. */
   def verdictsFrom(t: DataFrame, check: DriftCheck): DataFrame = {
     val framed = t.select(
@@ -185,10 +181,6 @@ object Drift {
       col("pass"))
     Results.toVerdicts(framed, check.id, check.severity)
   }
-
-  def violations(df: DataFrame, check: DriftCheck,
-      pre: Option[DataFrame] = None): DataFrame =
-    violationsFrom(tests(df, check, pre), check)
 
   def violationsFrom(testsFrame: DataFrame, check: DriftCheck): DataFrame = {
     val t = testsFrame.filter(!col("pass"))

@@ -199,9 +199,6 @@ object GroupVariance {
     (verdictsFrom(t, check), violationsFrom(t, check))
   }
 
-  def verdicts(df: DataFrame, check: GroupVarianceCheck): DataFrame =
-    verdictsFrom(tests(df, check), check)
-
   /** Verdicts from a prebuilt `tests` frame. */
   def verdictsFrom(t: DataFrame, check: GroupVarianceCheck): DataFrame = {
     val framed = t.select(
@@ -214,9 +211,6 @@ object GroupVariance {
       (col("p_holm").isNaN || col("p_holm") >= check.alpha).as("pass"))
     Results.toVerdicts(framed, check.id, check.severity)
   }
-
-  def violations(df: DataFrame, check: GroupVarianceCheck): DataFrame =
-    violationsFrom(tests(df, check), check)
 
   def violationsFrom(testsFrame: DataFrame, check: GroupVarianceCheck): DataFrame = {
     val t = testsFrame.filter(!col("p_holm").isNaN && col("p_holm") < check.alpha)

@@ -107,7 +107,7 @@ class CellScanSpec extends SparkSpec {
       ("_ALL_", "a", "en", 700L), ("_ALL_", "a", "de", 300L),
       ("_ALL_", "b", "en", 400L), ("_ALL_", "b", "de", 600L))
       .toDF("panel", "grp", "value", "cnt")
-    val v = CategoricalConsistency.verdicts(raw, check, Some(pre))
+    val v = CategoricalConsistency.outputs(raw, check, Some(pre))._1
       .collect()
     // overall bar must carry pre's panel total (2000), not raw's (3)
     val overall = v.filter(_.getAs[String]("metric") == "overall_bar")
@@ -118,7 +118,7 @@ class CellScanSpec extends SparkSpec {
     val ovr = v.filter(_.getAs[String]("metric").endsWith("_one_vs_rest"))
     assert(ovr.nonEmpty && ovr.forall(_.getAs[Long]("n_obs") == 1000L))
     // violations path too
-    val viol = CategoricalConsistency.violations(raw, check, Some(pre))
+    val viol = CategoricalConsistency.outputs(raw, check, Some(pre))._2
     viol.collect() // must not fail; counts derived from pre via the cells cache
   }
 

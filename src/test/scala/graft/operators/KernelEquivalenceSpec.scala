@@ -65,9 +65,9 @@ class KernelEquivalenceSpec extends SparkSpec {
     for (seed <- 1 to 2; c <- configs) graft.engine.CacheTracker.scope {
       val pre = Some(catPre(seed).cache())
       val at = s"seed $seed ${c.id}"
-      sameRows(CategoricalConsistency.verdicts(null, c, pre),
+      sameRows(CategoricalConsistency.outputs(null, c, pre)._1,
         CategoricalConsistencyRef.verdicts(null, c, pre), s"$at verdicts")
-      sameRows(CategoricalConsistency.violations(null, c, pre),
+      sameRows(CategoricalConsistency.outputs(null, c, pre)._2,
         CategoricalConsistencyRef.violations(null, c, pre), s"$at violations")
       if (seed == 1) {
         sameRows(CategoricalConsistency.cells(null, c, pre),
@@ -117,8 +117,8 @@ class KernelEquivalenceSpec extends SparkSpec {
     for (seed <- 1 to 2; c <- configs) graft.engine.CacheTracker.scope {
       val pre = Some(digitPre(seed).cache())
       val at = s"seed $seed ${c.id}"
-      val v = DigitPreference.violations(null, c, pre)
-      sameRows(DigitPreference.verdicts(null, c, pre),
+      val v = DigitPreference.outputs(null, c, pre)._2
+      sameRows(DigitPreference.outputs(null, c, pre)._1,
         DigitPreferenceRef.verdicts(null, c, pre), s"$at verdicts")
       sameRows(v, DigitPreferenceRef.violations(null, c, pre), s"$at violations")
       sameRows(DigitPreference.digitCounts(null, c, pre),
@@ -149,8 +149,8 @@ class KernelEquivalenceSpec extends SparkSpec {
       val pre = Some(driftPre(seed).groupBy(keys: _*)
         .agg(org.apache.spark.sql.functions.sum("cnt").as("cnt")).cache())
       val at = s"seed $seed ${c.id}"
-      sameRows(Drift.verdicts(null, c, pre), DriftRef.verdicts(null, c, pre), s"$at verdicts")
-      sameRows(Drift.violations(null, c, pre), DriftRef.violations(null, c, pre), s"$at violations")
+      sameRows(Drift.outputs(null, c, pre)._1, DriftRef.verdicts(null, c, pre), s"$at verdicts")
+      sameRows(Drift.outputs(null, c, pre)._2, DriftRef.violations(null, c, pre), s"$at violations")
       sameRows(Drift.histogram(null, c, pre), DriftRef.histogram(null, c, pre), s"$at histogram")
       pre.get.unpersist()
     }
@@ -178,8 +178,8 @@ class KernelEquivalenceSpec extends SparkSpec {
         StructField("y", DoubleType), StructField("x", DoubleType))))
       val c = GroupVarianceCheck("gv", "y", "grp", contCovariates = Seq("x"),
         scope = Seq("s"), alpha = 0.2)
-      sameRows(GroupVariance.verdicts(df, c), GroupVarianceRef.verdicts(df, c), s"seed $seed verdicts")
-      sameRows(GroupVariance.violations(df, c), GroupVarianceRef.violations(df, c),
+      sameRows(GroupVariance.outputs(df, c)._1, GroupVarianceRef.verdicts(df, c), s"seed $seed verdicts")
+      sameRows(GroupVariance.outputs(df, c)._2, GroupVarianceRef.violations(df, c),
         s"seed $seed violations")
     }
   }

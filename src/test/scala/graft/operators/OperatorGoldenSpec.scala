@@ -49,7 +49,7 @@ class OperatorGoldenSpec extends SparkSpec {
     assert(t("B")._1, "B must flag GOF")
     assert(t("C")._2, "C must flag none-share")
     assert(!t("C")._1, "C has no GOF data at all (all sentinel)")
-    val v = DigitPreference.violations(df, check).collect()
+    val v = DigitPreference.outputs(df, check, None)._2.collect()
     assert(v.exists(_.getAs[String]("key") == "B"))
     assert(v.exists(_.getAs[String]("key") == "C"))
     assert(!v.exists(_.getAs[String]("key") == "A"))
@@ -104,7 +104,7 @@ class OperatorGoldenSpec extends SparkSpec {
     // planted site contaminates the pool) — but S4 must be the most extreme
     assert(got("S4")._2 < 0.05)
     assert(got("S4")._1 == got.values.map(_._1).max)
-    val viol = CategoricalConsistency.violations(df, check).collect()
+    val viol = CategoricalConsistency.outputs(df, check, None)._2.collect()
     assert(viol.exists(_.getAs[String]("key") == "S4"))
   }
 
@@ -192,7 +192,7 @@ class OperatorGoldenSpec extends SparkSpec {
     val t = CategoricalConsistency.tests(df, check).collect()
     assert(t.forall(_.getAs[String]("test_used") == "fisher"))
     assert(t.forall(r => math.abs(r.getAs[Double]("p_raw") - 0.0012350309) < 1e-9))
-    val v = CategoricalConsistency.verdicts(df, check)
+    val v = CategoricalConsistency.outputs(df, check, None)._1
       .filter(col("metric") === "fisher_one_vs_rest").collect()
     assert(v.nonEmpty)
     // 2 categories → same exact path
@@ -212,7 +212,7 @@ class OperatorGoldenSpec extends SparkSpec {
     val check = CategoricalConsistencyCheck("cf3", "resp", "site", test = "fisher")
     val t = CategoricalConsistency.tests(df, check).collect()
     assert(t.forall(_.getAs[String]("test_used") == "chisq_fallback"))
-    val v = CategoricalConsistency.verdicts(df, check)
+    val v = CategoricalConsistency.outputs(df, check, None)._1
       .filter(col("metric").contains("fallback")).collect()
     assert(v.nonEmpty && v.forall(_.getAs[String]("metric") == "chisq_fallback_one_vs_rest"))
   }
@@ -253,7 +253,7 @@ class OperatorGoldenSpec extends SparkSpec {
     assert(gotS.collect().exists(r =>
       math.abs(r.getAs[Double]("p_holm") - sep(r.getAs[String]("grp"))) > 1e-15))
     // verdict surface carries the pooled values
-    val v = CategoricalConsistency.verdicts(df, check).collect()
+    val v = CategoricalConsistency.outputs(df, check, None)._1.collect()
     assert(v.nonEmpty)
   }
 
@@ -265,7 +265,7 @@ class OperatorGoldenSpec extends SparkSpec {
     val bar = CategoricalConsistency.overallBar(df, check).collect()
       .map(r => r.getAs[String]("value") -> (r.getAs[Long]("cnt"), r.getAs[Double]("row_pct"))).toMap
     assert(bar("x") == ((90L, 45.0)) && bar("y") == ((110L, 55.0)))
-    val v = CategoricalConsistency.verdicts(df, check)
+    val v = CategoricalConsistency.outputs(df, check, None)._1
       .filter(col("metric") === "overall_bar").collect()
     assert(v.length == 1)
     assert(v(0).getAs[String]("partition").endsWith("grp=_All_"))
@@ -276,8 +276,8 @@ class OperatorGoldenSpec extends SparkSpec {
     val rows = Seq.fill(60)(("A", "x")) ++ Seq.fill(40)(("A", "y")) ++
       Seq.fill(10)(("B", "x")) ++ Seq.fill(90)(("B", "y"))
     val df = rows.toDF("site", "resp")
-    val v = CategoricalConsistency.verdicts(df,
-      CategoricalConsistencyCheck("pw", "resp", "site", pairwise = true, alphaBar = 0.05))
+    val v = CategoricalConsistency.outputs(df,
+      CategoricalConsistencyCheck("pw", "resp", "site", pairwise = true, alphaBar = 0.05), None)._1
       .collect()
     val pairRows = v.filter(_.getAs[String]("metric").endsWith("_pairwise"))
     assert(pairRows.length == 1)
@@ -349,7 +349,7 @@ class OperatorGoldenSpec extends SparkSpec {
         (r.getAs[Double]("stat"), r.getAs[Double]("p_holm"))).toMap
     assert(t("G4")._2 < 0.05, s"G4 p=${t("G4")._2}")
     assert(t("G4")._1 == t.values.map(_._1).max, "planted group is most extreme")
-    val v = GroupVariance.violations(df, check).collect()
+    val v = GroupVariance.outputs(df, check)._2.collect()
     assert(v.map(_.getAs[String]("key")).contains("G4"))
 
     // homogeneous groups → no flags at all
