@@ -85,7 +85,9 @@ class CheckCompilerSpec extends SparkSpec {
       DigitPreferenceCheck("dp", "v", groupCol = "grp", dateCol = Some("ts"), scope = Seq("id")),
       GroupVarianceCheck("gv", "v", "grp", discCovariates = Seq("id"), scope = Seq("ts")),
       RegressionOutlierCheck("ro", "v", "id", contCovariates = Seq("v"), scope = Seq("grp")),
-      LongitudinalOutlierCheck("lo", "v", "id", discCovariates = Seq("grp")),
+      LongitudinalOutlierCheck("lo", "v", "id", discCovariates = Seq("grp"),
+        randomTerms = Seq("ts"), slopeVar = Some("grp")),
+      UnPanelCheck("up", "v", "id", slotCol = "grp", dateCol = Some("ts"), scope = Seq("cat")),
       DriftCheck("dr", "v", "ts", scope = Seq("grp")),
       ByteIdentityCheck("bi", "id", "grp"),
       NearDupCheck("nd", idCol = "id", textCol = "grp"))
@@ -103,7 +105,9 @@ class CheckCompilerSpec extends SparkSpec {
         case x: RegressionOutlierCheck =>
           Set(x.outcome, x.idCol) ++ x.discCovariates ++ x.contCovariates ++ x.scope
         case x: LongitudinalOutlierCheck =>
-          Set(x.outcome, x.idCol) ++ x.discCovariates ++ x.contCovariates ++ x.scope
+          Set(x.outcome, x.idCol) ++ x.discCovariates ++ x.contCovariates ++ x.scope ++
+            x.randomTerms ++ x.slopeVar
+        case x: UnPanelCheck => Set(x.outcome, x.idCol, x.slotCol) ++ x.dateCol ++ x.scope
         case x: DriftCheck => Set(x.column, x.dateCol) ++ x.scope
         case x: ByteIdentityCheck => Set(x.keyCol, x.column)
         case x: NearDupCheck => Set(x.idCol, x.textCol)
